@@ -114,18 +114,31 @@ def _gunzip_bounded(payload: bytes) -> bytes:
     """Bounded transparent gunzip of a \\x1f\\x8b\\x08 payload.  Real crawl
     tables carry occasional double-compressed bodies (a Content-Encoding
     survivor the WARC writer stored verbatim); treating them as 'raw'
-    would emit binary soup as content — silent wrong output.  Truncated
-    or oversized members raise ValueError (-> error side-channel)."""
+    would emit binary soup as content — silent wrong output.  Like
+    gzip.decompress, every concatenated member is decoded and NUL padding
+    between members is skipped; the cap applies to the total output.
+    Truncated or oversized members and trailing non-gzip bytes raise
+    ValueError (-> error side-channel)."""
     import zlib
 
-    d = zlib.decompressobj(wbits=31)
-    out = d.decompress(payload, _MAX_GUNZIP_BYTES)
-    if d.unconsumed_tail:
-        raise ValueError(
-            f"gzip member exceeds {_MAX_GUNZIP_BYTES} bytes decompressed")
-    if not d.eof:
-        raise ValueError("truncated gzip member")
-    return out
+    out: list[bytes] = []
+    room = _MAX_GUNZIP_BYTES
+    while True:
+        d = zlib.decompressobj(wbits=31)
+        # room + 1: output past the cap is detected, never buffered whole
+        chunk = d.decompress(payload, room + 1)
+        if len(chunk) > room:
+            raise ValueError(
+                f"gzip output exceeds {_MAX_GUNZIP_BYTES} bytes decompressed")
+        if not d.eof:
+            raise ValueError("truncated gzip member")
+        out.append(chunk)
+        room -= len(chunk)
+        payload = d.unused_data.lstrip(b"\x00")
+        if not payload:
+            return b"".join(out)
+        if payload[:2] != b"\x1f\x8b":
+            raise ValueError("trailing bytes after gzip member")
 
 
 def extract_document(payload: bytes) -> dict:

@@ -13,6 +13,8 @@ just a rows-only smoke check.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -180,204 +182,157 @@ def q_pipeline_kinds(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_N_DIALECT_DOCS = 100
-_DIALECT_TOTAL_PAGES = 268  # generator spec: sum of planned page counts
-                            # (scripts/derive_kind_expectations.py)
+def _doc_gate(spark: SparkSession, n_docs: int,
+              check: Callable[[int], tuple[int, ...]],
+              cols: tuple[str, ...]) -> DataFrame:
+    """Per-doc gate runner: ``check(doc_id) -> tuple[int, ...]`` runs
+    executor-side over ``range(n_docs)`` in 8 partitions (one Arrow Python
+    stage), and the single driver row is ``n_docs`` plus the long sum of
+    each value, named by ``cols``.  Map-only; the final agg is the one
+    exchange."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([check(int(i)) for i in pdf["id"]],
+                               columns=list(cols))
+
+    return (
+        spark.range(0, n_docs, numPartitions=8)
+        .mapInPandas(run, schema=", ".join(f"{c} int" for c in cols))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
+             *(F.sum(c).cast("long").alias(c) for c in cols))
+    )
 
 
-@query(
-    "q_pdf_dialects",
-    # Structural (non-circular) oracle: parsing the SAME document serialized
-    # as classic PDF 1.4 and as modern PDF 1.5 (xref stream + ObjStm + mixed
-    # ASCIIHex/ASCII85/RunLength/Flate/LZW filters, LZW in both /EarlyChange
-    # modes) must yield byte-identical
-    # text and page structure; total pages comes from the generator's page
-    # plan, not from the parser.
-    f"""
-    SELECT CAST({_N_DIALECT_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_DIALECT_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_DIALECT_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+#: Twin-route gates.  Each doc is serialized twice from the SAME rng seed
+#: (``{tag}:{doc_id}``, so identical text) through a base and a variant
+#: ``make_pdf`` route; both must parse to byte-identical page texts,
+#: metadata and page count.  The oracle is structural and never consults
+#: the parser.  Row: (rng tag, n_docs, planned page total, routes); a route
+#: is (base kwargs, variant kwargs), cycled by doc_id; ``dialect`` defaults
+#: to modern on odd doc_id and classic on even.  Page totals are the
+#: generator's page plan (scripts/derive_kind_expectations.twin_total_pages,
+#: pinned per row by tests/test_pipeline_kinds_spec.py).  Plain data only:
+#: key_fingerprint hashes this table by repr.
+_TWIN_GATES = {
+    # PDF 1.4 classic xref vs 1.5 xref/object streams + mixed filters
+    "q_pdf_dialects": ("dialect-gate", 100, 268, [
+        ({"dialect": "classic"}, {"dialect": "modern"})]),
+    # Type1 literal strings vs Type0/Identity-H + ToUnicode bfchar/bfrange
+    "q_pdf_cmap": ("cmap-gate", 100, 253, [
+        ({"font": "simple"}, {"font": "cid"})]),
+    # Type0 without ToUnicode: unicode from the embedded TrueType cmap
+    "q_pdf_fontcmap": ("fontcmap-gate", 100, 252, [
+        ({"font": "simple"}, {"font": "cid-fontfile"})]),
+    # Type0 whose only mapping is the predefined /UniGB-UCS2-H CMap
+    "q_pdf_ucs2": ("ucs2-gate", 80, 214, [
+        ({"font": "simple"}, {"font": "cid-ucs2"})]),
+    # /Encoding is an embedded CMap stream; codes differ from CIDs
+    "q_pdf_embedded_cmap": ("embcmap-gate", 80, 198, [
+        ({"font": "simple"}, {"font": "cid-cmap"})]),
+    # predefined national-encoding / UTF-16 CMaps vs the certified UCS2
+    # route, one per CMap family (codec routing: test_pdf_codec_cmap.py)
+    "q_pdf_cjk": ("cjk-gate", 80, 192, [
+        ({"font": "cid-ucs2", "charset": cs}, {"font": font, "charset": cs})
+        for font, cs in (("cid-rksj", "ja"), ("cid-gbk", "zh-hans"),
+                         ("cid-b5", "zh-hant"), ("cid-uhc", "ko"),
+                         ("cid-utf16", "ja"))]),
+    # embedded CMap with a mixed 1-byte/2-byte codespace vs UCS2
+    "q_pdf_mixed_cmap": ("mixedcmap-gate", 80, 195, [
+        ({"font": "cid-ucs2", "charset": cs},
+         {"font": "cid-mixed", "charset": cs})
+        for cs in ("latin", "ja", "zh-hans", "ko")]),
+    # embedded CMap composing /UniGB-UCS2-H via usecmap vs UCS2
+    "q_pdf_usecmap": ("usecmap-gate", 80, 199, [
+        ({"font": "cid-ucs2", "charset": cs},
+         {"font": "cid-usecmap", "charset": cs})
+        for cs in ("latin", "ja", "zh-hans", "ko")]),
+    # simple-font encodings (WinAnsi, MacRoman, /Differences, 1-byte
+    # ToUnicode, Standard) vs UCS2 (tables: test_pdf_simple_enc.py)
+    "q_pdf_simple_enc": ("senc-gate", 80, 189, [
+        ({"font": "cid-ucs2", "charset": cs}, {"font": font, "charset": cs})
+        for font, cs in (("simple-winansi", "win"),
+                         ("simple-macroman", "win"), ("simple-diff", "latin"),
+                         ("simple-diff", "ja"), ("simple-tu", "win"),
+                         ("simple-standard", "std"))]),
+    # flat vs odd lines inside /Form XObjects (Do, /Matrix, own resources)
+    "q_pdf_form": ("form-gate", 80, 216, [
+        ({"font": font, "charset": cs},
+         {"font": font, "charset": cs, "wrap_form": True})
+        for font, cs in (("simple", "latin"), ("cid-ucs2", "ja"),
+                         ("simple-winansi", "win"), ("cid-mixed", "ja"),
+                         ("cid", "latin"))]),
+}
+
+
+def _twin_oracle(name: str, extra: tuple[str, ...] = ()) -> str:
+    """Every doc matches (and passes each ``extra`` proof); the page total
+    is the row's generator plan."""
+    _tag, n_docs, total_pages, _routes = _TWIN_GATES[name]
+    cols = ", ".join(f"CAST({n_docs} AS BIGINT) AS {c}"
+                     for c in ("n_docs", "n_text_match", *extra))
+    return f"SELECT {cols}, CAST({total_pages} AS BIGINT) AS total_pages"
+
+
+def _twin_gate(spark: SparkSession, name: str,
+               extra: tuple[str, ...] = ()) -> DataFrame:
+    """Run one _TWIN_GATES row: n_text_match, then the ``extra`` proofs on
+    the variant — n_has_cjk (its text holds CJK, so the codec path ran) and
+    n_img_match (every serialized /Subtype /Image surfaced through the
+    recursive image walk) — then total_pages."""
+    import random as _random
+
+    from ..kernels.pdf import parse_pdf
+    from ..sources.synth import make_pdf
+
+    tag, n_docs, _total, routes = _TWIN_GATES[name]
+
+    def has_cjk(r, _raw):
+        return any(ord(c) > 0x2E00 for p in r["pages"] for c in p["text"])
+
+    def img_match(r, raw):
+        return (sum(len(p["images"]) for p in r["pages"])
+                == raw.count(b"/Subtype /Image"))
+
+    proofs = [{"n_has_cjk": has_cjk, "n_img_match": img_match}[c]
+              for c in extra]
+
+    def check(doc_id):
+        dialect = "modern" if doc_id % 2 else "classic"
+        raw = [make_pdf(_random.Random(f"{tag}:{doc_id}"), doc_id,
+                        **{"dialect": dialect, **kw})[0]
+               for kw in routes[doc_id % len(routes)]]
+        a, b = (parse_pdf(x) for x in raw)
+        same = ([p["text"] for p in a["pages"]]
+                == [p["text"] for p in b["pages"]]
+                and a["metadata"] == b["metadata"]
+                and a["n_pages"] == b["n_pages"])
+        return (int(same), *(int(f(b, raw[1])) for f in proofs),
+                b["n_pages"])
+
+    return _doc_gate(spark, n_docs, check,
+                     ("n_text_match", *extra, "total_pages"))
+
+
+@query("q_pdf_dialects", _twin_oracle("q_pdf_dialects"))
 def q_pdf_dialects(spark: SparkSession, sf: str) -> DataFrame:
-    """PDF 1.5 dialect gate (VERDICT.md item 3): serialize 100 documents in
-    BOTH dialects executor-side, parse both with the kernel, and require
-    text/page equality per document plus the generator-spec page total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                rc = parse_pdf(make_pdf(
-                    _random.Random(f"dialect-gate:{doc_id}"), doc_id,
-                    dialect="classic")[0])
-                rm = parse_pdf(make_pdf(
-                    _random.Random(f"dialect-gate:{doc_id}"), doc_id,
-                    dialect="modern")[0])
-                same = (
-                    [p["text"] for p in rc["pages"]]
-                    == [p["text"] for p in rm["pages"]]
-                    and rc["metadata"] == rm["metadata"]
-                    and rc["n_pages"] == rm["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rc["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_DIALECT_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Classic vs modern xref-dialect twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_dialects")
 
 
-_N_CMAP_DOCS = 100
-_CMAP_TOTAL_PAGES = 253  # generator spec: sum of planned page counts
-                         # (scripts/derive_kind_expectations.py)
-
-
-@query(
-    "q_pdf_cmap",
-    # Structural (non-circular) oracle, same discipline as q_pdf_dialects:
-    # the SAME document serialized with a simple Type1 font (literal Latin-1
-    # strings) and with a composite Type0/Identity-H font (hex CID strings +
-    # ToUnicode CMap with bfchar AND bfrange sections) must parse to
-    # byte-identical text and page structure; the page total comes from the
-    # generator's page plan, not from the parser.
-    f"""
-    SELECT CAST({_N_CMAP_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_CMAP_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_CMAP_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_cmap", _twin_oracle("q_pdf_cmap"))
 def q_pdf_cmap(spark: SparkSession, sf: str) -> DataFrame:
-    """Composite-font gate (round-3 item 1; reference reads CMap fonts via
-    MuPDF, text_extractor.py:51-53): serialize 100 documents with simple AND
-    Type0/CID+ToUnicode fonts executor-side — alternating classic/modern
-    xref dialects underneath — parse both with the kernel, and require
-    text/metadata/page equality per document plus the generator-spec page
-    total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                dialect = "modern" if doc_id % 2 else "classic"
-                rs = parse_pdf(make_pdf(
-                    _random.Random(f"cmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="simple")[0])
-                rc = parse_pdf(make_pdf(
-                    _random.Random(f"cmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid")[0])
-                same = (
-                    [p["text"] for p in rs["pages"]]
-                    == [p["text"] for p in rc["pages"]]
-                    and rs["metadata"] == rc["metadata"]
-                    and rs["n_pages"] == rc["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rs["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_CMAP_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
-
-_N_FONTCMAP_DOCS = 100
-_FONTCMAP_TOTAL_PAGES = 252  # generator spec: sum of planned page counts
-                             # (scripts/derive_kind_expectations.py)
+    """Composite Type0 + ToUnicode font twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_cmap")
 
 
-@query(
-    "q_pdf_fontcmap",
-    # Structural (non-circular) oracle, same discipline as q_pdf_cmap: the
-    # SAME document serialized with a simple Type1 font and with a Type0
-    # font that has NO /ToUnicode CMap — only an embedded TrueType program
-    # (/FontFile2) whose format-4 cmap the parser must invert to recover
-    # unicode — must parse to byte-identical text and page structure; the
-    # page total comes from the generator's page plan, not the parser.
-    f"""
-    SELECT CAST({_N_FONTCMAP_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_FONTCMAP_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_FONTCMAP_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_fontcmap", _twin_oracle("q_pdf_fontcmap"))
 def q_pdf_fontcmap(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedded-font-cmap gate (round-4 item 4; VERDICT.md round-3
-    'What's missing' #3 — real subsetted PDFs often omit /ToUnicode and
-    force consumers to read the embedded font program's cmap table;
-    reference capability via MuPDF, text_extractor.py:51-53): serialize
-    100 documents with simple AND Type0/Identity-H fonts where the
-    composite variant embeds a minimal TrueType carrying a format-4 cmap
-    (sources/synth_ttf.py) instead of a /ToUnicode stream, parse both with
-    the kernel (kernels/pdf.py _parse_truetype_cmap inverts unicode->GID;
-    GID == CID under /CIDToGIDMap /Identity), and require text/metadata/
-    page equality per document plus the generator-spec page total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                dialect = "modern" if doc_id % 2 else "classic"
-                rs = parse_pdf(make_pdf(
-                    _random.Random(f"fontcmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="simple")[0])
-                rf = parse_pdf(make_pdf(
-                    _random.Random(f"fontcmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-fontfile")[0])
-                same = (
-                    [p["text"] for p in rs["pages"]]
-                    == [p["text"] for p in rf["pages"]]
-                    and rs["metadata"] == rf["metadata"]
-                    and rs["n_pages"] == rf["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rs["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_FONTCMAP_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Embedded TrueType cmap twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_fontcmap")
 
 
 _N_CRAWLMETA_DOCS = 80
@@ -452,562 +407,46 @@ def q_crawl_meta(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_N_UCS2_DOCS = 80
-_UCS2_TOTAL_PAGES = 214  # generator spec: sum of planned page counts
-                         # (scripts/derive_kind_expectations.py)
-
-
-@query(
-    "q_pdf_ucs2",
-    # Structural (non-circular) oracle, same discipline as q_pdf_fontcmap:
-    # the SAME document serialized with a simple Type1 font and with a
-    # Type0 font whose ONLY text mapping is the predefined /UniGB-UCS2-H
-    # CMap (no /ToUnicode, no /FontFile2 — the 2-byte codes ARE the UCS-2
-    # code points) must parse to byte-identical text and page structure;
-    # the page total comes from the generator's page plan, not the parser.
-    f"""
-    SELECT CAST({_N_UCS2_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_UCS2_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_UCS2_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_ucs2", _twin_oracle("q_pdf_ucs2"))
 def q_pdf_ucs2(spark: SparkSession, sf: str) -> DataFrame:
-    """Predefined-UCS2-CMap gate (the residual of VERDICT round-3 'What's
-    missing' #3 the /FontFile2 fallback doesn't cover: real CJK PDFs name
-    Adobe's Uni*-UCS2 CMaps instead of embedding a ToUnicode stream; the
-    reference reads them via MuPDF's bundled CMap resources,
-    text_extractor.py:51-53): serialize 80 documents with simple AND
-    Type0 /UniGB-UCS2-H fonts, parse both with the kernel
-    (kernels/pdf.py _ucs2_decode — code bytes decode directly as UCS-2),
-    and require text/metadata/page equality per document plus the
-    generator-spec page total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                dialect = "modern" if doc_id % 2 else "classic"
-                rs = parse_pdf(make_pdf(
-                    _random.Random(f"ucs2-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="simple")[0])
-                ru = parse_pdf(make_pdf(
-                    _random.Random(f"ucs2-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-ucs2")[0])
-                same = (
-                    [p["text"] for p in rs["pages"]]
-                    == [p["text"] for p in ru["pages"]]
-                    and rs["metadata"] == ru["metadata"]
-                    and rs["n_pages"] == ru["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rs["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_UCS2_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Predefined UCS2 CMap twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_ucs2")
 
 
-_N_EMBCMAP_DOCS = 80
-_EMBCMAP_TOTAL_PAGES = 198  # generator spec: sum of planned page counts
-                            # (scripts/derive_kind_expectations.py)
-
-
-@query(
-    "q_pdf_embedded_cmap",
-    # Structural (non-circular) oracle, same discipline as q_pdf_ucs2: the
-    # SAME document serialized with a simple Type1 font and with a Type0
-    # font whose /Encoding is an EMBEDDED CMap STREAM (code -> CID with
-    # code = CID + 0x2100, no /ToUnicode; CID -> unicode recovered from the
-    # descendant TrueType program) must parse to byte-identical text and
-    # page structure; the page total comes from the generator's page plan.
-    f"""
-    SELECT CAST({_N_EMBCMAP_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_EMBCMAP_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_EMBCMAP_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_embedded_cmap", _twin_oracle("q_pdf_embedded_cmap"))
 def q_pdf_embedded_cmap(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedded-/Encoding-CMap gate (VERDICT round-4 'What's missing' #1:
-    an /Encoding pointing at a CMap STREAM object — the reference reads
-    such fonts via MuPDF, text_extractor.py:51-53): serialize 80 documents
-    with simple AND Type0 embedded-CMap fonts over both xref dialects,
-    parse both with the kernel (kernels/pdf.py _parse_cid_cmap composing
-    code->CID with the descendant font's cid->unicode), and require
-    text/metadata/page equality per document plus the generator-spec page
-    total.  Show-string codes differ from CIDs by a fixed offset, so
-    equality is impossible without actually applying the CMap."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                dialect = "modern" if doc_id % 2 else "classic"
-                rs = parse_pdf(make_pdf(
-                    _random.Random(f"embcmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="simple")[0])
-                rc = parse_pdf(make_pdf(
-                    _random.Random(f"embcmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-cmap")[0])
-                same = (
-                    [p["text"] for p in rs["pages"]]
-                    == [p["text"] for p in rc["pages"]]
-                    and rs["metadata"] == rc["metadata"]
-                    and rs["n_pages"] == rc["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rs["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_EMBCMAP_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Embedded /Encoding CMap stream twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_embedded_cmap")
 
 
-_N_CJK_DOCS = 80
-#: per-doc (font route, charset) plan: every predefined national-encoding /
-#: UTF-16 CMap family gets 16 of the 80 docs
-_CJK_ROUTES = (
-    ("cid-rksj", "ja"), ("cid-gbk", "zh-hans"), ("cid-b5", "zh-hant"),
-    ("cid-uhc", "ko"), ("cid-utf16", "ja"),
-)
-_CJK_TOTAL_PAGES = 192  # generator spec: sum of planned page counts
-                        # (scripts/derive_kind_expectations.cjk_total_pages)
-
-
-@query(
-    "q_pdf_cjk",
-    # Structural (non-circular) oracle, same discipline as q_pdf_ucs2: the
-    # SAME document (same seed, same CJK charset) serialized through the
-    # certified predefined-UCS2 route and through a predefined
-    # national-encoding / UTF-16 CMap route (90ms-RKSJ-H / GBK-EUC-H /
-    # ETen-B5-H / KSCms-UHC-H / UniJIS-UTF16-H) must parse to
-    # byte-identical text and page structure; the page total comes from
-    # the generator's page plan.  n_has_cjk proves non-vacuity: every doc's
-    # recovered text contains multi-byte CJK, so the codec decode path is
-    # actually exercised (name->codec routing itself is pinned against
-    # hand-transcribed byte vectors in tests/test_pdf_codec_cmap.py).
-    f"""
-    SELECT CAST({_N_CJK_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_CJK_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_N_CJK_DOCS} AS BIGINT) AS n_has_cjk,
-           CAST({_CJK_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_cjk", _twin_oracle("q_pdf_cjk", ("n_has_cjk",)))
 def q_pdf_cjk(spark: SparkSession, sf: str) -> DataFrame:
-    """Predefined national-encoding CMap gate (the residual of VERDICT
-    round-4 'What's missing' #1 after embedded CMap streams: real CJK PDFs
-    overwhelmingly name Adobe's predefined CMaps — 90ms-RKSJ-H for
-    Shift-JIS Japanese, GBK-EUC-H for simplified Chinese, ETen-B5-H for
-    traditional Chinese, KSCms-UHC-H for Korean, Uni*-UTF16-H for
-    UTF-16 — instead of embedding a mapping; the reference reads them via
-    MuPDF's bundled CMap resources, text_extractor.py:51-53): serialize 80
-    CJK documents through the predefined-UCS2 route AND the per-doc codec
-    route over both xref dialects, parse both with the kernel
-    (kernels/pdf.py _CodecCMapDecoder — the CMap's code space IS the
-    national encoding, PDF 32000-1 §9.7.5.2 Table 118), and require
-    text/metadata/page equality per document plus the generator-spec page
-    total and a CJK-content proof per document."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, has_cjk, npages = [], [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                font, charset = _CJK_ROUTES[doc_id % len(_CJK_ROUTES)]
-                dialect = "modern" if doc_id % 2 else "classic"
-                ru = parse_pdf(make_pdf(
-                    _random.Random(f"cjk-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-ucs2", charset=charset)[0])
-                rc = parse_pdf(make_pdf(
-                    _random.Random(f"cjk-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font=font, charset=charset)[0])
-                same = (
-                    [p["text"] for p in ru["pages"]]
-                    == [p["text"] for p in rc["pages"]]
-                    and ru["metadata"] == rc["metadata"]
-                    and ru["n_pages"] == rc["n_pages"]
-                )
-                match.append(1 if same else 0)
-                has_cjk.append(1 if any(
-                    ord(c) > 0x2E00
-                    for p in rc["pages"] for c in p["text"]) else 0)
-                npages.append(rc["n_pages"])
-            yield pd.DataFrame({"m": match, "c": has_cjk, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_CJK_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, c int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("c").cast("long").alias("n_has_cjk"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Predefined national-encoding CMap twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_cjk", ("n_has_cjk",))
 
 
-_N_MIXED_DOCS = 80
-#: per-doc charset plan: latin exercises mostly-1-byte strings (the 10%
-#: latin-1 extras are the 2-byte outliers), the CJK charsets exercise
-#: heavily-interleaved 1-byte/2-byte strings
-_MIXED_CHARSETS = ("latin", "ja", "zh-hans", "ko")
-_MIXED_TOTAL_PAGES = 195  # generator spec: sum of planned page counts
-                          # (derive_kind_expectations.mixed_cmap_total_pages)
-
-
-@query(
-    "q_pdf_mixed_cmap",
-    # Structural (non-circular) oracle, same discipline as
-    # q_pdf_embedded_cmap: the SAME document serialized through the
-    # certified predefined-UCS2 route and through an embedded CMap stream
-    # with a MIXED-width codespace (1-byte <20><7E> ASCII codes + 2-byte
-    # <8020><FEFE> codes, generator-assigned so code != CID) must parse to
-    # byte-identical text and page structure; the page total comes from
-    # the generator's page plan.  Text equality is impossible unless the
-    # kernel splits variable-width show strings by per-byte
-    # codespace-range matching (kernels/pdf.py _VarWidthCidDecoder) AND
-    # applies the code->CID->unicode composition.
-    f"""
-    SELECT CAST({_N_MIXED_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_MIXED_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_MIXED_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_mixed_cmap", _twin_oracle("q_pdf_mixed_cmap"))
 def q_pdf_mixed_cmap(spark: SparkSession, sf: str) -> DataFrame:
-    """Mixed-width embedded-CMap gate (the final residual of VERDICT
-    round-4 'What's missing' #1: real RKSJ/EUC-style CMaps mix 1-byte
-    ASCII with 2-byte CJK ranges; the round-4 embedded-CMap support
-    error-routed them): serialize 80 documents through the
-    predefined-UCS2 route AND the mixed-width embedded-CMap route over
-    both xref dialects and four charsets, parse both with the kernel, and
-    require text/metadata/page equality per document plus the
-    generator-spec page total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                charset = _MIXED_CHARSETS[doc_id % len(_MIXED_CHARSETS)]
-                dialect = "modern" if doc_id % 2 else "classic"
-                ru = parse_pdf(make_pdf(
-                    _random.Random(f"mixedcmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-ucs2", charset=charset)[0])
-                rm = parse_pdf(make_pdf(
-                    _random.Random(f"mixedcmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-mixed", charset=charset)[0])
-                same = (
-                    [p["text"] for p in ru["pages"]]
-                    == [p["text"] for p in rm["pages"]]
-                    and ru["metadata"] == rm["metadata"]
-                    and ru["n_pages"] == rm["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rm["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_MIXED_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Mixed-width embedded CMap twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_mixed_cmap")
 
 
-_N_USECMAP_DOCS = 80
-_USECMAP_CHARSETS = ("latin", "ja", "zh-hans", "ko")
-_USECMAP_TOTAL_PAGES = 199  # generator spec: sum of planned page counts
-                            # (derive_kind_expectations.usecmap_total_pages)
-
-
-@query(
-    "q_pdf_usecmap",
-    # Structural (non-circular) oracle, same discipline as the other font
-    # gates: the SAME document serialized through the certified
-    # predefined-UCS2 route and through an embedded CMap that COMPOSES
-    # /UniGB-UCS2-H via usecmap (every second distinct char overridden
-    # into the private <E000><E0FF> codespace, code->CID->FontFile2
-    # unicode; the rest base UCS-2 codes) must parse to byte-identical
-    # text and page structure; the page total comes from the generator's
-    # page plan.  Equality requires BOTH composition halves: the embedded
-    # overrides AND the base fallthrough.
-    f"""
-    SELECT CAST({_N_USECMAP_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_USECMAP_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_USECMAP_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_usecmap", _twin_oracle("q_pdf_usecmap"))
 def q_pdf_usecmap(spark: SparkSession, sf: str) -> DataFrame:
-    """/UseCMap composition gate (the final CMap-family error-route from
-    the round-4 kernel scope note; the reference reads composed CMaps via
-    MuPDF's CMap machinery, text_extractor.py:51-53): serialize 80
-    documents through the predefined-UCS2 route AND the usecmap route
-    over both xref dialects and four charsets, parse both with the kernel
-    (kernels/pdf.py _usecmap_base + _VarWidthCidDecoder base fallback),
-    and require text/metadata/page equality per document plus the
-    generator-spec page total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                charset = _USECMAP_CHARSETS[doc_id % len(_USECMAP_CHARSETS)]
-                dialect = "modern" if doc_id % 2 else "classic"
-                ru = parse_pdf(make_pdf(
-                    _random.Random(f"usecmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-ucs2", charset=charset)[0])
-                rc = parse_pdf(make_pdf(
-                    _random.Random(f"usecmap-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-usecmap",
-                    charset=charset)[0])
-                same = (
-                    [p["text"] for p in ru["pages"]]
-                    == [p["text"] for p in rc["pages"]]
-                    and ru["metadata"] == rc["metadata"]
-                    and ru["n_pages"] == rc["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rc["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_USECMAP_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """/UseCMap composition twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_usecmap")
 
 
-_N_SENC_DOCS = 80
-#: per-doc (font route, charset): WinAnsi/MacRoman base tables over the
-#: cp1252-special pool, /Differences with classic-AGL + uniXXXX names over
-#: latin AND ja text, a scrambled 1-byte /ToUnicode subset font, and
-#: Adobe StandardEncoding over its own ligature/punctuation repertoire
-_SENC_ROUTES = (
-    ("simple-winansi", "win"), ("simple-macroman", "win"),
-    ("simple-diff", "latin"), ("simple-diff", "ja"), ("simple-tu", "win"),
-    ("simple-standard", "std"),
-)
-_SENC_TOTAL_PAGES = 189  # generator spec: sum of planned page counts
-                         # (derive_kind_expectations.simple_enc_total_pages)
-
-
-@query(
-    "q_pdf_simple_enc",
-    # Structural (non-circular) oracle, same discipline as the composite-
-    # font gates: the SAME document serialized through the certified
-    # predefined-UCS2 route and through a simple font with an explicit
-    # encoding (/WinAnsiEncoding, /MacRomanEncoding, /Differences with AGL
-    # names, or a scrambled 1-byte /ToUnicode) must parse to
-    # byte-identical text and page structure.  The 'win' charset puts
-    # cp1252-specific characters (0x80-0x9F bytes) in every document, so
-    # the base-table routes cannot pass under the old Latin-1 default;
-    # /Differences codes disagree with WinAnsi positions and /ToUnicode
-    # codes with every standard table, so both remapping routes require
-    # the mapping to actually apply.  Table positions themselves are
-    # pinned against hand-transcribed vectors in
-    # tests/test_pdf_simple_enc.py.
-    f"""
-    SELECT CAST({_N_SENC_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_SENC_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_SENC_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_simple_enc", _twin_oracle("q_pdf_simple_enc"))
 def q_pdf_simple_enc(spark: SparkSession, sf: str) -> DataFrame:
-    """Simple-font encoding gate (PDF 32000-1 §9.6.6 + Appendix D — the
-    encodings real non-CJK PDFs carry on almost every page; the reference
-    reads them via MuPDF's builtin tables, text_extractor.py:51-53):
-    serialize 80 documents through the predefined-UCS2 route AND the
-    per-doc simple-font encoding route over both xref dialects, parse both
-    with the kernel (kernels/pdf.py _simple_encoding_table /
-    _glyph_to_unicode / the simple-font ToUnicode branch), and require
-    text/metadata/page equality per document plus the generator-spec page
-    total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                font, charset = _SENC_ROUTES[doc_id % len(_SENC_ROUTES)]
-                dialect = "modern" if doc_id % 2 else "classic"
-                ru = parse_pdf(make_pdf(
-                    _random.Random(f"senc-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font="cid-ucs2", charset=charset)[0])
-                rc = parse_pdf(make_pdf(
-                    _random.Random(f"senc-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font=font, charset=charset)[0])
-                same = (
-                    [p["text"] for p in ru["pages"]]
-                    == [p["text"] for p in rc["pages"]]
-                    and ru["metadata"] == rc["metadata"]
-                    and ru["n_pages"] == rc["n_pages"]
-                )
-                match.append(1 if same else 0)
-                npages.append(rc["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_SENC_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Simple-font encoding twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_simple_enc")
 
 
-_N_FORM_DOCS = 80
-#: per-doc (font route, charset) for the form gate — forms compose with
-#: both simple and composite fonts
-_FORM_ROUTES = (
-    ("simple", "latin"), ("cid-ucs2", "ja"), ("simple-winansi", "win"),
-    ("cid-mixed", "ja"), ("cid", "latin"),
-)
-_FORM_TOTAL_PAGES = 216  # generator spec: sum of planned page counts
-                        # (derive_kind_expectations.form_total_pages)
-
-
-@query(
-    "q_pdf_form",
-    # Structural (non-circular) oracle: the SAME document (same seed, so
-    # identical text — the page paragraphs are drawn before serialization
-    # diverges) serialized flat and with every page's odd-indexed lines
-    # inside a /Subtype /Form XObject (rendered 500 units low, /Matrix
-    # translating back, fonts scoped to the FORM's own /Resources) must
-    # parse to byte-identical text; reading order is only correct if the
-    # kernel executes Do AND composes the Matrix AND scopes resources.
-    # n_img_match counts docs where every serialized /Subtype /Image
-    # surfaced through the recursive image walk (forms hold the images).
-    f"""
-    SELECT CAST({_N_FORM_DOCS} AS BIGINT) AS n_docs,
-           CAST({_N_FORM_DOCS} AS BIGINT) AS n_text_match,
-           CAST({_N_FORM_DOCS} AS BIGINT) AS n_img_match,
-           CAST({_FORM_TOTAL_PAGES} AS BIGINT) AS total_pages
-    """,
-)
+@query("q_pdf_form", _twin_oracle("q_pdf_form", ("n_img_match",)))
 def q_pdf_form(spark: SparkSession, sf: str) -> DataFrame:
-    """Form-XObject gate (PDF 32000-1 §8.10 — real pages carry much of
-    their text inside /Subtype /Form XObjects; until round 5 the kernel
-    ignored Do, silently dropping that text; the reference reads it via
-    MuPDF's display list, text_extractor.py:51-53): serialize 80
-    documents flat AND form-wrapped over both xref dialects and five
-    font routes, parse both with the kernel (kernels/pdf.py _extract_runs
-    Do handling + the recursive _page_images walk), and require text/
-    metadata/page equality plus the all-images-found proof per document
-    plus the generator-spec page total."""
-    import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..kernels.pdf import parse_pdf
-    from ..sources.synth import make_pdf
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, imgm, npages = [], [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                font, charset = _FORM_ROUTES[doc_id % len(_FORM_ROUTES)]
-                dialect = "modern" if doc_id % 2 else "classic"
-                ru = parse_pdf(make_pdf(
-                    _random.Random(f"form-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font=font, charset=charset)[0])
-                wrapped = make_pdf(
-                    _random.Random(f"form-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font=font, charset=charset,
-                    wrap_form=True)[0]
-                rf = parse_pdf(wrapped)
-                same = (
-                    [p["text"] for p in ru["pages"]]
-                    == [p["text"] for p in rf["pages"]]
-                    and ru["metadata"] == rf["metadata"]
-                    and ru["n_pages"] == rf["n_pages"]
-                )
-                n_found = sum(len(p["images"]) for p in rf["pages"])
-                match.append(1 if same else 0)
-                imgm.append(
-                    1 if n_found == wrapped.count(b"/Subtype /Image")
-                    else 0)
-                npages.append(rf["n_pages"])
-            yield pd.DataFrame({"m": match, "g": imgm, "p": npages})
-
-    per_doc = (
-        spark.range(0, _N_FORM_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, g int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("g").cast("long").alias("n_img_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    """Form-XObject twin gate (_TWIN_GATES)."""
+    return _twin_gate(spark, "q_pdf_form", ("n_img_match",))
 
 
 _N_GZIP_DOCS = 60
@@ -1028,54 +467,31 @@ _N_GZIP_DOCS = 60
     """,
 )
 def q_gzip_transparent(spark: SparkSession, sf: str) -> DataFrame:
-    """Transparent-gunzip gate (real crawl tables carry double-compressed
-    bodies — Content-Encoding survivors stored verbatim; treating them as
-    raw text would emit binary soup as content, silent wrong output):
-    extract 60 payloads (pdf/html/raw thirds, both PDF dialects) plain
-    AND gzip-wrapped, and require full result-tree equality plus
-    inner-kind correctness per document (kernels/dispatch.py
-    _gunzip_bounded, 64 MiB bomb cap, <=3 nested members)."""
+    """Transparent-gunzip gate: extract 60 payloads (pdf/html/raw thirds,
+    both PDF dialects) plain AND gzip-wrapped, and require full
+    result-tree equality plus inner-kind correctness per document
+    (kernels/dispatch.py _gunzip_bounded)."""
     import gzip as _gzip
     import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..kernels.dispatch import extract_document
     from ..sources.synth import make_html, make_pdf, make_raw
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, kind_ok = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                kind = ("pdf", "html", "raw")[doc_id % 3]
-                rng = _random.Random(f"gzip-gate:{doc_id}")
-                if kind == "pdf":
-                    payload = make_pdf(
-                        rng, doc_id,
-                        dialect="modern" if doc_id % 2 else "classic")[0]
-                elif kind == "html":
-                    payload = make_html(rng, doc_id, "en")
-                else:
-                    payload = make_raw(rng, doc_id)
-                rp = extract_document(payload)
-                rg = extract_document(_gzip.compress(payload, 6, mtime=0))
-                match.append(1 if rp == rg else 0)
-                kind_ok.append(
-                    1 if rg["kind"] == kind and rg["status"] == "ok"
-                    else 0)
-            yield pd.DataFrame({"m": match, "k": kind_ok})
+    def check(doc_id):
+        kind = ("pdf", "html", "raw")[doc_id % 3]
+        rng = _random.Random(f"gzip-gate:{doc_id}")
+        if kind == "pdf":
+            payload = make_pdf(
+                rng, doc_id, dialect="modern" if doc_id % 2 else "classic")[0]
+        elif kind == "html":
+            payload = make_html(rng, doc_id, "en")
+        else:
+            payload = make_raw(rng, doc_id)
+        rp = extract_document(payload)
+        rg = extract_document(_gzip.compress(payload, 6, mtime=0))
+        return int(rp == rg), int(rg["kind"] == kind and rg["status"] == "ok")
 
-    per_doc = (
-        spark.range(0, _N_GZIP_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, k int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_match"),
-        F.sum("k").cast("long").alias("n_kind_ok"),
-    )
+    return _doc_gate(spark, _N_GZIP_DOCS, check, ("n_match", "n_kind_ok"))
 
 
 _N_MERGE_DOCS = 50
@@ -1244,60 +660,39 @@ _CCITT_TOTAL_PAGES = 149  # generator spec: sum of planned page counts
     """,
 )
 def q_ccitt(spark: SparkSession, sf: str) -> DataFrame:
-    """CCITTFaxDecode gate (VERDICT round-4 'What's missing' #2: scanned-
-    document PDFs carry G3/G4 images; the reference reads them via MuPDF):
-    serialize 60 documents with every image as Flate-gray AND as CCITT
-    over both xref dialects, parse both with the kernel, and require text
-    equality plus pixel-identical grayscale for every image pair, plus the
-    generator-spec page total."""
+    """CCITTFaxDecode gate: serialize 60 documents with every image as
+    Flate-gray AND as CCITT over both xref dialects, parse both with the
+    kernel, and require text equality plus pixel-identical grayscale for
+    every image pair, plus the generator-spec page total."""
     import random as _random
     import zlib as _zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..kernels.ccitt import unpack_bilevel
     from ..kernels.pdf import parse_pdf
     from ..sources.synth import make_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                dialect = "modern" if doc_id % 2 else "classic"
-                ra = parse_pdf(make_pdf(
-                    _random.Random(f"ccitt-gate:{doc_id}"), doc_id,
-                    dialect=dialect, image_coding="flate-gray")[0])
-                rb = parse_pdf(make_pdf(
-                    _random.Random(f"ccitt-gate:{doc_id}"), doc_id,
-                    dialect=dialect, image_coding="ccitt")[0])
-                same = (
-                    [p["text"] for p in ra["pages"]]
-                    == [p["text"] for p in rb["pages"]]
-                    and ra["n_pages"] == rb["n_pages"]
-                )
-                for pa, pb in zip(ra["pages"], rb["pages"]):
-                    if len(pa["images"]) != len(pb["images"]):
-                        same = False
-                        break
-                    for ia, ib in zip(pa["images"], pb["images"]):
-                        if _zlib.decompress(ia["payload"]) != unpack_bilevel(
-                                ib["payload"], ib["width"], ib["height"]):
-                            same = False
-                match.append(1 if same else 0)
-                npages.append(ra["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
+    def check(doc_id):
+        dialect = "modern" if doc_id % 2 else "classic"
+        ra, rb = (parse_pdf(make_pdf(
+            _random.Random(f"ccitt-gate:{doc_id}"), doc_id,
+            dialect=dialect, image_coding=coding)[0])
+            for coding in ("flate-gray", "ccitt"))
+        same = (
+            [p["text"] for p in ra["pages"]]
+            == [p["text"] for p in rb["pages"]]
+            and ra["n_pages"] == rb["n_pages"]
+        )
+        for pa, pb in zip(ra["pages"], rb["pages"]):
+            if len(pa["images"]) != len(pb["images"]):
+                same = False
+                break
+            for ia, ib in zip(pa["images"], pb["images"]):
+                if _zlib.decompress(ia["payload"]) != unpack_bilevel(
+                        ib["payload"], ib["width"], ib["height"]):
+                    same = False
+        return int(same), ra["n_pages"]
 
-    per_doc = (
-        spark.range(0, _N_CCITT_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    return _doc_gate(spark, _N_CCITT_DOCS, check, ("n_match", "total_pages"))
 
 
 _N_CRYPT_DOCS = 60
@@ -1319,16 +714,13 @@ _CRYPT_TOTAL_PAGES = 158  # generator spec: sum of planned page counts
     """,
 )
 def q_pdf_encrypted(spark: SparkSession, sf: str) -> DataFrame:
-    """Encryption gate (round-3 item 2; the reference opens encrypted PDFs
-    via MuPDF): serialize 60 documents plaintext AND standard-handler
-    encrypted executor-side — variant doc_id%4 in {rc4-40, rc4-128,
-    aes-128, aes-256(R5)}, xref dialect doc_id%2, font dialect doc_id%4 —
-    decrypt+parse with the kernel, and require text/metadata/image-payload
-    equality per document plus the generator-spec page total."""
+    """Encryption gate: serialize 60 documents plaintext AND
+    standard-handler encrypted executor-side — variant doc_id%4 in {rc4-40,
+    rc4-128, aes-128, aes-256(R5)}, xref dialect doc_id%2, font dialect
+    doc_id%4 — decrypt+parse with the kernel, and require
+    text/metadata/image-payload equality per document plus the
+    generator-spec page total."""
     import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..kernels.pdf import parse_pdf
     from ..sources.synth import make_pdf
@@ -1339,45 +731,24 @@ def q_pdf_encrypted(spark: SparkSession, sf: str) -> DataFrame:
     # pure-Python cost belongs in pytest, not a 50-query driver run)
     variants = ["rc4-40", "rc4-128", "aes-128", "aes-256-r5"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, npages = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                dialect = "modern" if doc_id % 2 else "classic"
-                font = "cid" if doc_id % 4 >= 2 else "simple"
-                rp = parse_pdf(make_pdf(
-                    _random.Random(f"crypt-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font=font)[0])
-                re_ = parse_pdf(make_pdf(
-                    _random.Random(f"crypt-gate:{doc_id}"), doc_id,
-                    dialect=dialect, font=font,
-                    encrypt=variants[doc_id % 4])[0])
-                same = (
-                    [p["text"] for p in rp["pages"]]
-                    == [p["text"] for p in re_["pages"]]
-                    and rp["metadata"] == re_["metadata"]
-                    and [
-                        [img["payload"] for img in p["images"]]
-                        for p in rp["pages"]
-                    ] == [
-                        [img["payload"] for img in p["images"]]
-                        for p in re_["pages"]
-                    ]
-                )
-                match.append(1 if same else 0)
-                npages.append(rp["n_pages"])
-            yield pd.DataFrame({"m": match, "p": npages})
+    def check(doc_id):
+        dialect = "modern" if doc_id % 2 else "classic"
+        font = "cid" if doc_id % 4 >= 2 else "simple"
+        rp, re_ = (parse_pdf(make_pdf(
+            _random.Random(f"crypt-gate:{doc_id}"), doc_id,
+            dialect=dialect, font=font, encrypt=enc)[0])
+            for enc in (None, variants[doc_id % 4]))
+        same = (
+            [p["text"] for p in rp["pages"]]
+            == [p["text"] for p in re_["pages"]]
+            and rp["metadata"] == re_["metadata"]
+            and [[img["payload"] for img in p["images"]] for p in rp["pages"]]
+            == [[img["payload"] for img in p["images"]] for p in re_["pages"]]
+        )
+        return int(same), rp["n_pages"]
 
-    per_doc = (
-        spark.range(0, _N_CRYPT_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, p int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_text_match"),
-        F.sum("p").cast("long").alias("total_pages"),
-    )
+    return _doc_gate(spark, _N_CRYPT_DOCS, check,
+                     ("n_text_match", "total_pages"))
 
 
 _N_TABLE_DOCS = 60
@@ -1402,70 +773,52 @@ _TABLE_ROWS = 554    # generator spec: sum of per-grid row counts
     """,
 )
 def q_pdf_tables(spark: SparkSession, sf: str) -> DataFrame:
-    """PDF-native table detection gate (round-4 item 1; OP-61 — the
-    reference extracts PDF tables via pdfplumber's word-cluster strategy,
-    table_extractor.py:42-135): serialize 60 documents executor-side, each
-    page carrying one grid of positioned runs (emission-shuffled), detect
-    tables with the kernel's x-cluster column alignment (kernels/pdf.py
-    _detect_tables), and require three-way cell-data equality per doc —
-    PDF-detected == DOM-parsed HTML twin == generator spec — plus page-text
-    equality (grid rows join reading order) and the spec totals."""
+    """PDF-native table detection gate (OP-61; the reference uses
+    pdfplumber's word-cluster strategy, table_extractor.py:42-135):
+    serialize 60 documents executor-side, each page carrying one grid of
+    positioned runs (emission-shuffled), detect tables with the kernel's
+    x-cluster column alignment (kernels/pdf.py _detect_tables), and require
+    three-way cell-data equality per doc — PDF-detected == DOM-parsed HTML
+    twin == generator spec — plus page-text equality (grid rows join
+    reading order) and the spec totals."""
     import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..kernels import dom
     from ..kernels.pdf import parse_pdf
     from ..sources.synth import make_pdf, make_table_spec, table_spec_html
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, ntab, nrow = [], [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                n_pages = 1 + doc_id % 3
-                specs = [
-                    make_table_spec(_random.Random(f"table-spec:{doc_id}:{p}"))
-                    for p in range(n_pages)
-                ]
-                pdf_bytes, exp_lines = make_pdf(
-                    _random.Random(f"table-gate:{doc_id}"), doc_id,
-                    n_pages=n_pages,
-                    dialect="modern" if doc_id % 2 else "classic",
-                    page_tables=specs)
-                r = parse_pdf(pdf_bytes)
-                html = (
-                    "<html><head><title>t</title></head><body>"
-                    + "".join(table_spec_html(s) for s in specs)
-                    + "</body></html>"
-                )
-                h = dom.parse_html(html.encode("utf-8"))
-                want = [s["rows"] for s in specs]
-                got = [t for p in r["pages"] for t in p["tables"]]
-                same = (
-                    got == want
-                    and h["tables"] == want
-                    and all(
-                        p["text"] == "\n".join(el)
-                        for p, el in zip(r["pages"], exp_lines)
-                    )
-                )
-                match.append(1 if same else 0)
-                ntab.append(len(got))
-                nrow.append(sum(len(t) for t in got))
-            yield pd.DataFrame({"m": match, "t": ntab, "r": nrow})
+    def check(doc_id):
+        n_pages = 1 + doc_id % 3
+        specs = [
+            make_table_spec(_random.Random(f"table-spec:{doc_id}:{p}"))
+            for p in range(n_pages)
+        ]
+        pdf_bytes, exp_lines = make_pdf(
+            _random.Random(f"table-gate:{doc_id}"), doc_id,
+            n_pages=n_pages,
+            dialect="modern" if doc_id % 2 else "classic",
+            page_tables=specs)
+        r = parse_pdf(pdf_bytes)
+        html = (
+            "<html><head><title>t</title></head><body>"
+            + "".join(table_spec_html(s) for s in specs)
+            + "</body></html>"
+        )
+        h = dom.parse_html(html.encode("utf-8"))
+        want = [s["rows"] for s in specs]
+        got = [t for p in r["pages"] for t in p["tables"]]
+        same = (
+            got == want
+            and h["tables"] == want
+            and all(
+                p["text"] == "\n".join(el)
+                for p, el in zip(r["pages"], exp_lines)
+            )
+        )
+        return int(same), len(got), sum(len(t) for t in got)
 
-    per_doc = (
-        spark.range(0, _N_TABLE_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, t int, r int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_match"),
-        F.sum("t").cast("long").alias("total_tables"),
-        F.sum("r").cast("long").alias("total_rows"),
-    )
+    return _doc_gate(spark, _N_TABLE_DOCS, check,
+                     ("n_match", "total_tables", "total_rows"))
 
 
 _N_LINK_DOCS = 80
@@ -1489,66 +842,48 @@ _LINK_TOTAL = 337   # generator spec: sum of per-page randint(0,4) link draws
     """,
 )
 def q_pdf_links(spark: SparkSession, sf: str) -> DataFrame:
-    """PDF /Annots link-URI harvesting gate (round 4; OP-23/OP-31 PDF-side
-    parity — the reference walks fitz page.get_links(),
-    extract_cam_followers.py:96-99, while until now only the DOM kernel
-    emitted links): serialize 80 documents executor-side with spec-rng URI
-    lists as /Subtype /Link annotations (even links via /A << /S /URI >>
-    actions, odd via the PDF 1.1 direct /URI key; dialect alternates
-    classic/modern; every 4th doc RC4-128-encrypted so URI string
-    decryption is exercised), parse with the kernel (kernels/pdf.py
+    """PDF /Annots link-URI harvesting gate (OP-23/OP-31 PDF-side parity —
+    the reference walks fitz page.get_links(),
+    extract_cam_followers.py:96-99): serialize 80 documents executor-side
+    with spec-rng URI lists as /Subtype /Link annotations (even links via
+    /A << /S /URI >> actions, odd via the PDF 1.1 direct /URI key; dialect
+    alternates classic/modern; every 4th doc RC4-128-encrypted so URI
+    string decryption is exercised), parse with the kernel (kernels/pdf.py
     _page_links), and require per-page link equality with the spec AND
     with the DOM-parsed HTML twin carrying the same anchors."""
     import random as _random
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..kernels import dom
     from ..kernels.pdf import parse_pdf
     from ..sources.synth import make_pdf
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            match, nlinks = [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                n_pages = 1 + doc_id % 3
-                spec: list[list[str]] = []
-                for p in range(n_pages):
-                    rng = _random.Random(f"link-spec:{doc_id}:{p}")
-                    n = rng.randint(0, 4)
-                    spec.append([
-                        f"https://s{rng.randint(0, 99)}.example"
-                        f"/p{rng.randint(0, 9999)}"
-                        for _ in range(n)
-                    ])
-                pdf_bytes, _ = make_pdf(
-                    _random.Random(f"link-gate:{doc_id}"), doc_id,
-                    n_pages=n_pages,
-                    dialect="modern" if doc_id % 2 else "classic",
-                    encrypt="rc4-128" if doc_id % 4 == 0 else None,
-                    page_links=spec)
-                r = parse_pdf(pdf_bytes)
-                got = [pg["links"] for pg in r["pages"]]
-                flat = [u for pl in spec for u in pl]
-                html = (
-                    "<html><head><title>l</title></head><body><p>"
-                    + " ".join(f'<a href="{u}">x</a>' for u in flat)
-                    + "</p></body></html>"
-                )
-                h = dom.parse_html(html.encode("utf-8"))
-                same = got == spec and h["links"] == flat
-                match.append(1 if same else 0)
-                nlinks.append(sum(len(pl) for pl in got))
-            yield pd.DataFrame({"m": match, "l": nlinks})
+    def check(doc_id):
+        n_pages = 1 + doc_id % 3
+        spec: list[list[str]] = []
+        for p in range(n_pages):
+            rng = _random.Random(f"link-spec:{doc_id}:{p}")
+            n = rng.randint(0, 4)
+            spec.append([
+                f"https://s{rng.randint(0, 99)}.example"
+                f"/p{rng.randint(0, 9999)}"
+                for _ in range(n)
+            ])
+        pdf_bytes, _ = make_pdf(
+            _random.Random(f"link-gate:{doc_id}"), doc_id,
+            n_pages=n_pages,
+            dialect="modern" if doc_id % 2 else "classic",
+            encrypt="rc4-128" if doc_id % 4 == 0 else None,
+            page_links=spec)
+        r = parse_pdf(pdf_bytes)
+        got = [pg["links"] for pg in r["pages"]]
+        flat = [u for pl in spec for u in pl]
+        html = (
+            "<html><head><title>l</title></head><body><p>"
+            + " ".join(f'<a href="{u}">x</a>' for u in flat)
+            + "</p></body></html>"
+        )
+        h = dom.parse_html(html.encode("utf-8"))
+        return int(got == spec and h["links"] == flat), \
+            sum(len(pl) for pl in got)
 
-    per_doc = (
-        spark.range(0, _N_LINK_DOCS, numPartitions=8)
-        .mapInPandas(run, schema="m int, l int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("m").cast("long").alias("n_match"),
-        F.sum("l").cast("long").alias("total_links"),
-    )
+    return _doc_gate(spark, _N_LINK_DOCS, check, ("n_match", "total_links"))

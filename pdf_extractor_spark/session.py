@@ -27,6 +27,13 @@ __all__ = ["get_spark", "package_zip", "ARROW_BATCH_ROWS"]
 ARROW_BATCH_ROWS = 256
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 32g: a larger heap lets the driver JVM
+    grow past the machine's memory and get OOM-killed mid-run."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 32 << 30) >> 20}m"
+
+
 def get_spark(
     cores: int | None = None,
     app: str = "pdf-extractor-spark",
@@ -48,7 +55,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

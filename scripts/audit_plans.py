@@ -173,8 +173,6 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
-        n_exch = len(re.findall(r"\bExchange\b|\(\d+\) Exchange", plan))
-        n_exch = plan.count("+- Exchange") + plan.count(": Exchange")
         n_exch = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
         has_bhj = "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
         has_arrow = "ArrowEvalPython" in plan or "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan

@@ -1,11 +1,16 @@
-"""Derive the q_pipeline_kinds / q_pdf_dialects oracle constants from the
-corpus GENERATOR's spec — independent of the extraction kernels under test.
+"""Derive the driver gates' oracle constants from the corpus GENERATOR's
+spec — independent of the extraction kernels under test.
 
-The generator (sources/synth.gen_doc) states, per document, which dialect it
+The generator (sources/synth) states, per document, which dialect it
 emitted and how many pages it planned; a correct parser must report exactly
-that.  Run this after changing the generator and paste the printed constants
-into operators/pipeline_queries.py; tests/test_pipeline_kinds_spec.py keeps
-them honest on every pytest run.
+that.  The twin-route gates are one table, ``_TWIN_GATES`` in
+operators/pipeline_queries.py, whose rows carry their planned page totals;
+``twin_total_pages(name)`` recomputes a row's total from ``make_pdf``'s page
+plan, and tests/test_pipeline_kinds_spec.py checks every row against it on
+each pytest run.  The other gates (q_pipeline_kinds, q_ccitt,
+q_pdf_encrypted, q_table_merge, q_ocr_raster, q_pdf_links) keep one
+function each here.  After a generator change, run this and update the
+printed constants in the gate modules:
 
     python scripts/derive_kind_expectations.py
 """
@@ -34,140 +39,18 @@ def kind_expectations(n_docs: int = 300, seed: int = 42) -> dict[str, tuple[int,
     return {k: (docs[k], pages[k]) for k in sorted(docs)}
 
 
-def dialect_total_pages(n_docs: int = 100) -> int:
-    """Planned page total of the q_pdf_dialects fixture set."""
+def twin_total_pages(name: str) -> int:
+    """Planned page total of one _TWIN_GATES row: the page line lists
+    make_pdf plans for each doc's variant route (the page plan is the
+    generator's first rng draw, so both routes plan the same pages)."""
+    from pdf_extractor_spark.operators.pipeline_queries import _TWIN_GATES
+
+    tag, n_docs, _total, routes = _TWIN_GATES[name]
     total = 0
     for doc_id in range(n_docs):
-        rng = random.Random(f"dialect-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, dialect="classic")
-        total += len(lines)
-    return total
-
-
-def cmap_total_pages(n_docs: int = 100) -> int:
-    """Planned page total of the q_pdf_cmap fixture set (same page plan for
-    both font dialects — the rng draw sequence is font-invariant)."""
-    total = 0
-    for doc_id in range(n_docs):
-        rng = random.Random(f"cmap-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font="simple",
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def fontcmap_total_pages(n_docs: int = 100) -> int:
-    """Planned page total of the q_pdf_fontcmap fixture set (page plan is
-    font-dialect-invariant — the rng draw sequence does not depend on how
-    strings are serialized)."""
-    total = 0
-    for doc_id in range(n_docs):
-        rng = random.Random(f"fontcmap-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font="simple",
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def ucs2_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_ucs2 fixture set (page plan is
-    font-dialect-invariant, same argument as the other font gates)."""
-    total = 0
-    for doc_id in range(n_docs):
-        rng = random.Random(f"ucs2-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font="simple",
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def embcmap_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_embedded_cmap fixture set (page plan
-    is font-dialect-invariant, same argument as the other font gates)."""
-    total = 0
-    for doc_id in range(n_docs):
-        rng = random.Random(f"embcmap-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font="simple",
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def cjk_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_cjk fixture set (page plan is the
-    generator's FIRST rng draw — before any charset-dependent word draws —
-    so it is font- and charset-invariant; computed here with the gate's
-    exact per-doc route anyway)."""
-    from pdf_extractor_spark.operators.pipeline_queries import _CJK_ROUTES
-
-    total = 0
-    for doc_id in range(n_docs):
-        font, charset = _CJK_ROUTES[doc_id % len(_CJK_ROUTES)]
-        rng = random.Random(f"cjk-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font=font, charset=charset,
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def mixed_cmap_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_mixed_cmap fixture set."""
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _MIXED_CHARSETS,
-    )
-
-    total = 0
-    for doc_id in range(n_docs):
-        charset = _MIXED_CHARSETS[doc_id % len(_MIXED_CHARSETS)]
-        rng = random.Random(f"mixedcmap-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font="cid-mixed", charset=charset,
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def usecmap_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_usecmap fixture set."""
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _USECMAP_CHARSETS,
-    )
-
-    total = 0
-    for doc_id in range(n_docs):
-        charset = _USECMAP_CHARSETS[doc_id % len(_USECMAP_CHARSETS)]
-        rng = random.Random(f"usecmap-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font="cid-usecmap",
-                            charset=charset,
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def simple_enc_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_simple_enc fixture set."""
-    from pdf_extractor_spark.operators.pipeline_queries import _SENC_ROUTES
-
-    total = 0
-    for doc_id in range(n_docs):
-        font, charset = _SENC_ROUTES[doc_id % len(_SENC_ROUTES)]
-        rng = random.Random(f"senc-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font=font, charset=charset,
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
-
-
-def form_total_pages(n_docs: int = 80) -> int:
-    """Planned page total of the q_pdf_form fixture set."""
-    from pdf_extractor_spark.operators.pipeline_queries import _FORM_ROUTES
-
-    total = 0
-    for doc_id in range(n_docs):
-        font, charset = _FORM_ROUTES[doc_id % len(_FORM_ROUTES)]
-        rng = random.Random(f"form-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, font=font, charset=charset,
-                            wrap_form=True,
-                            dialect="modern" if doc_id % 2 else "classic")
+        kw = {"dialect": "modern" if doc_id % 2 else "classic",
+              **routes[doc_id % len(routes)][1]}
+        _, lines = make_pdf(random.Random(f"{tag}:{doc_id}"), doc_id, **kw)
         total += len(lines)
     return total
 
@@ -253,16 +136,10 @@ if __name__ == "__main__":
     print("q_pipeline_kinds (kind, 'ok', n_docs, total_pages):")
     for kind, (n, p) in kind_expectations().items():
         print(f"  ('{kind}', 'ok', CAST({n} AS BIGINT), CAST({p} AS BIGINT))")
-    print(f"q_pdf_dialects total_pages: {dialect_total_pages()}")
-    print(f"q_pdf_cmap total_pages: {cmap_total_pages()}")
-    print(f"q_pdf_fontcmap total_pages: {fontcmap_total_pages()}")
-    print(f"q_pdf_ucs2 total_pages: {ucs2_total_pages()}")
-    print(f"q_pdf_embedded_cmap total_pages: {embcmap_total_pages()}")
-    print(f"q_pdf_cjk total_pages: {cjk_total_pages()}")
-    print(f"q_pdf_mixed_cmap total_pages: {mixed_cmap_total_pages()}")
-    print(f"q_pdf_usecmap total_pages: {usecmap_total_pages()}")
-    print(f"q_pdf_simple_enc total_pages: {simple_enc_total_pages()}")
-    print(f"q_pdf_form total_pages: {form_total_pages()}")
+    from pdf_extractor_spark.operators.pipeline_queries import _TWIN_GATES
+
+    for name in _TWIN_GATES:
+        print(f"{name} total_pages: {twin_total_pages(name)}")
     print(f"q_ccitt total_pages: {ccitt_total_pages()}")
     print(f"q_table_merge total_merged: {table_merge_totals()}")
     print(f"q_pdf_encrypted total_pages: {crypt_total_pages()}")

@@ -215,3 +215,31 @@ def q_probe_b(spark, sf):
     assert load("helper", helper_add=2) != ref  # transitive helper
     assert load("oracle", oracle="SELECT 2 AS two") != ref  # oracle SQL
     assert load("noracle", oracle=None) != ref  # oracle removed
+
+
+def test_key_fingerprints_stable_across_processes():
+    """Every registered key's fingerprint is the same in two fresh
+    interpreters with different hash seeds.  A lambda or function object
+    held in a referenced table would repr with its memory address, and a
+    plain set of strings orders by hash seed; either would stale keys at
+    random between runs."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    probe = (
+        "import json, __spark_entry__\n"
+        "from pdf_extractor_spark.operators import registry as r\n"
+        "print(json.dumps({k: r.key_fingerprint(k) for k in r.QUERIES}))\n"
+    )
+    runs = []
+    for seed in ("1", "2"):
+        res = subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=Path(__file__).resolve().parent.parent,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True, text=True, check=True, timeout=300)
+        runs.append(json.loads(res.stdout.strip().splitlines()[-1]))
+    assert sorted(runs[0]) == sorted(QUERIES)
+    assert runs[0] == runs[1]

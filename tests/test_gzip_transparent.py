@@ -13,6 +13,8 @@ import random
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pdf_extractor_spark.kernels.dispatch import extract_document
@@ -103,3 +105,42 @@ class TestPdfPreamble:
         payload = _g.compress(b"junk-preamble\r\n" + pdf, mtime=0)
         r = extract_document(payload)
         assert r["kind"] == "pdf" and r["status"] == "ok"
+
+
+class TestMultiMemberGzip:
+    """Concatenated members decode like gzip.decompress: every member,
+    NUL padding between members skipped, the 64 MiB cap on the total,
+    anything else after a member error-routed."""
+
+    HTML_A = (b'<html><body><article><h1>T</h1><p>first member body with '
+              b'plenty of words to clear the content gate')
+    HTML_B = (b' and the second member carries the rest of this paragraph'
+              b'</p></article></body></html>')
+
+    def test_two_members(self):
+        payload = (gzip.compress(self.HTML_A, mtime=0)
+                   + gzip.compress(self.HTML_B, mtime=0))
+        assert gzip.decompress(payload) == self.HTML_A + self.HTML_B
+        r = extract_document(payload)
+        assert r == extract_document(self.HTML_A + self.HTML_B)
+        assert r["status"] == "ok"
+        assert "second member" in r["pages"][0]["text"]
+
+    def test_nul_padding_between_members(self):
+        payload = (gzip.compress(self.HTML_A, mtime=0) + b"\x00" * 7
+                   + gzip.compress(self.HTML_B, mtime=0) + b"\x00" * 3)
+        r = extract_document(payload)
+        assert r == extract_document(self.HTML_A + self.HTML_B)
+
+    def test_members_total_over_cap(self):
+        # each member is under the 64 MiB cap; together they exceed it
+        member = gzip.compress(b"\x00" * (40 << 20), 1)
+        r = extract_document(member + member)
+        assert r["status"] == "error" and "exceeds" in r["error"]
+
+    def test_trailing_junk_error_routes(self):
+        payload = gzip.compress(self.HTML_A, mtime=0) + b"trailing junk"
+        with pytest.raises(gzip.BadGzipFile):
+            gzip.decompress(payload)
+        r = extract_document(payload)
+        assert r["status"] == "error" and "gzip" in r["error"]

@@ -1,4 +1,4 @@
-"""The q_pipeline_kinds / q_pdf_dialects oracle constants must equal the
+"""The q_pipeline_kinds and twin-gate oracle constants must equal the
 corpus GENERATOR's spec (kernel-independent ground truth) — this breaks the
 golden-pin circularity: a kernel bug cannot bake itself into the expected
 values because the expectation never consults the kernels."""
@@ -7,12 +7,16 @@ import re
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from scripts.derive_kind_expectations import (
-    dialect_total_pages,
     kind_expectations,
+    twin_total_pages,
 )
+
+from pdf_extractor_spark.operators.pipeline_queries import _TWIN_GATES
 
 
 def _oracle(name: str) -> str:
@@ -34,57 +38,13 @@ def test_pipeline_kinds_constants_match_generator_spec():
     assert got == spec
 
 
-def test_pdf_dialects_constant_matches_generator_spec():
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _DIALECT_TOTAL_PAGES,
-        _N_DIALECT_DOCS,
-    )
-
-    assert _DIALECT_TOTAL_PAGES == dialect_total_pages(_N_DIALECT_DOCS)
-
-
-def test_pdf_cmap_constant_matches_generator_spec():
-    from scripts.derive_kind_expectations import cmap_total_pages
-
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _CMAP_TOTAL_PAGES,
-        _N_CMAP_DOCS,
-    )
-
-    assert _CMAP_TOTAL_PAGES == cmap_total_pages(_N_CMAP_DOCS)
-
-
-def test_pdf_fontcmap_constant_matches_generator_spec():
-    from scripts.derive_kind_expectations import fontcmap_total_pages
-
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _FONTCMAP_TOTAL_PAGES,
-        _N_FONTCMAP_DOCS,
-    )
-
-    assert _FONTCMAP_TOTAL_PAGES == fontcmap_total_pages(_N_FONTCMAP_DOCS)
-
-
-def test_pdf_ucs2_constant_matches_generator_spec():
-    from scripts.derive_kind_expectations import ucs2_total_pages
-
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _N_UCS2_DOCS,
-        _UCS2_TOTAL_PAGES,
-    )
-
-    assert _UCS2_TOTAL_PAGES == ucs2_total_pages(_N_UCS2_DOCS)
-
-
-def test_pdf_embedded_cmap_constant_matches_generator_spec():
-    from scripts.derive_kind_expectations import embcmap_total_pages
-
-    from pdf_extractor_spark.operators.pipeline_queries import (
-        _EMBCMAP_TOTAL_PAGES,
-        _N_EMBCMAP_DOCS,
-    )
-
-    assert _EMBCMAP_TOTAL_PAGES == embcmap_total_pages(_N_EMBCMAP_DOCS)
+@pytest.mark.parametrize("name", sorted(_TWIN_GATES))
+def test_twin_total_pages_match_generator_spec(name):
+    """Every _TWIN_GATES row's page total (and so its oracle) equals the
+    generator's page plan for that row."""
+    assert _TWIN_GATES[name][2] == twin_total_pages(name)
+    assert f"CAST({_TWIN_GATES[name][2]} AS BIGINT) AS total_pages" in \
+        _oracle(name)
 
 
 def test_ccitt_constant_matches_generator_spec():

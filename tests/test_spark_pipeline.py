@@ -148,3 +148,16 @@ def test_corrupt_payloads_surface_as_error_rows(spark):
     assert got["https://x/truncpdf"]["status"] == "error"
     assert got["https://x/truncpdf"]["error"]
     assert got["https://x/null"]["status"] in ("ok", "error")  # never raises
+
+
+def test_driver_heap_fits_physical_ram(spark):
+    """The session's driver heap is no larger than physical RAM: a 32g
+    default on a 16 GB machine let the test JVM grow until the kernel
+    OOM-killed it mid-suite."""
+    import os
+    import re
+
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    num, unit = re.fullmatch(r"(\d+)([kmgt]?)b?", conf.lower()).groups()
+    heap = int(num) << {"k": 10, "": 20, "m": 20, "g": 30, "t": 40}[unit]
+    assert heap <= os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
