@@ -4,18 +4,20 @@ Dataflow::
 
     read pages(url, warc_ts, html, text, lang)
       -> [resume] skip buckets already in the checkpoint manifest
-      -> oversized-payload routing (bounds executor memory: big docs get
-         their own high-fanout repartition so an Arrow batch never holds
-         many multi-MB payloads)                                  (§4.3.2)
-      -> url-hash repartition (urls are unique -> row-count uniform; the
-         *compute* skew lives in payload size, handled above; host-level
-         value skew is handled by salted aggregation in operators/relational)
-      -> ONE vectorized kernel pass (operators/extract.extract_udf)
-      -> doc assembly WITHOUT a shuffle: ordered text reassembly (OP-43b)
-         runs as array_sort + transform + concat_ws higher-order functions
-         over the pages array already resident in the row — the relational
-         groupBy formulation exists as operators.relational.ordered_concat
-         and is proven equal in tests
+      -> route_oversized: ONE repartition that spreads small docs over
+         url-hash buckets (urls are unique -> row-count uniform) and gives
+         each oversized doc its own bucket, so they scatter ~one per
+         partition and an Arrow batch never holds many multi-MB payloads
+         (§4.3.2); host-level value skew is handled by salted aggregation
+         in operators/relational
+      -> ONE kernel pass: docs-only runs use the slim mapInPandas
+         (operators/extract.extracted_docs_frame); runs that also write the
+         pages table persist the struct pass (extract_udf) for both sinks
+      -> pages-table runs assemble docs WITHOUT a shuffle: ordered text
+         reassembly (OP-43b) runs as array_sort + transform + concat_ws
+         higher-order functions over the pages array already resident in
+         the row — the relational groupBy formulation exists as
+         operators.relational.ordered_concat and is proven equal in tests
       -> per-bucket parquet write + checkpoint manifest row with lineage +
          doc/byte counters (Observation API)                      (§4.3.3)
 

@@ -22,8 +22,8 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "package_zip", "ARROW_BATCH_ROWS"]
 
 # Rows per Arrow batch crossing the JVM->Python boundary.  With ~4 KiB median
-# payloads this is ~1 MiB/batch; oversized docs are additionally routed to
-# low-fanout partitions by the pipeline (plans/pipeline.py).
+# payloads this is ~1 MiB/batch; oversized docs are additionally scattered
+# about one per partition by plans/pipeline.route_oversized.
 ARROW_BATCH_ROWS = 256
 
 

@@ -670,31 +670,39 @@ def _lzw_encode(data: bytes, early: int = 1) -> bytes:
             out.append((acc >> nacc) & 0xFF)
         acc &= (1 << nacc) - 1
 
-    dic = {bytes([c]): c for c in range(256)}
+    def grow() -> None:
+        # the decoder's dict trails by one entry; it widens before reading
+        # our NEXT code once its size reaches (1<<width) - early
+        nonlocal next_code, width
+        next_code += 1
+        if width < 12 and next_code - 1 >= (1 << width) - early:
+            width += 1
+
+    dic: dict[int, int] = {}  # (prefix code << 8 | next byte) -> code
     next_code = 258
     width = 9
     emit(256, width)
-    w = b""
+    w = -1  # code of the pending string; -1 = none yet
     for b in data:
-        wc = w + bytes([b])
-        if wc in dic:
-            w = wc
+        if w < 0:
+            w = b
             continue
-        emit(dic[w], width)
-        dic[wc] = next_code
-        next_code += 1
-        # the decoder's dict trails by one entry; it widens before reading
-        # our NEXT code once its size reaches (1<<width) - early
-        if width < 12 and next_code - 1 >= (1 << width) - early:
-            width += 1
+        code = dic.get(w << 8 | b)
+        if code is not None:
+            w = code
+            continue
+        emit(w, width)
+        dic[w << 8 | b] = next_code
+        grow()
         if next_code >= 4095:  # table full: clear and restart
             emit(256, width)
-            dic = {bytes([c]): c for c in range(256)}
+            dic = {}
             next_code = 258
             width = 9
-        w = bytes([b])
-    if w:
-        emit(dic[w], width)
+        w = b
+    if w >= 0:
+        emit(w, width)
+        grow()  # the decoder adds an entry after the final code too
     emit(257, width)
     if nacc:
         out.append((acc << (8 - nacc)) & 0xFF)

@@ -413,19 +413,34 @@ def test_inline_image_payload_containing_ei_pattern():
 # Round-4: LZWDecode (PDF 32000-1 §7.4.4, TIFF variant)
 # --------------------------------------------------------------------------
 def test_lzw_roundtrip_both_earlychange_modes():
-    import os
-    import random as _r
+    import random
 
     from pdf_extractor_spark.kernels.pdf import _lzw_decode
     from pdf_extractor_spark.sources.synth import _lzw_encode
 
-    _r.seed(4)
+    rng = random.Random(4)
     cases = [b"", b"A", b"AAAAAA", b"TOBEORNOTTOBEORTOBEORNOT",
-             os.urandom(10), os.urandom(300000),           # forces table-full Clear
-             bytes(_r.choices(b"abcd", k=120000)), b"ab" * 50000]
+             rng.randbytes(10), rng.randbytes(300000),     # forces table-full Clear
+             bytes(rng.choices(b"abcd", k=120000)), b"ab" * 50000]
     for early in (1, 0):
         for c in cases:
             assert _lzw_decode(_lzw_encode(c, early), early) == c
+
+
+def test_lzw_roundtrip_every_length_to_6000():
+    """Stream ends swept over all three code-width boundaries (9→10→11→12):
+    the decoder adds a table entry after the final code and may widen before
+    it reads EOD, so the encoder must emit EOD at that width."""
+    import random
+
+    from pdf_extractor_spark.kernels.pdf import _lzw_decode
+    from pdf_extractor_spark.sources.synth import _lzw_encode
+
+    data = bytes(random.Random(8).choices(b"abcdefgh BT ET Tj()0123", k=6000))
+    for early in (1, 0):
+        bad = [n for n in range(1, 6001)
+               if _lzw_decode(_lzw_encode(data[:n], early), early) != data[:n]]
+        assert bad == [], f"EarlyChange {early}: lengths {bad[:10]}"
 
 
 def test_lzw_hostile_inputs_error_route():
