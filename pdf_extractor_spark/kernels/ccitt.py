@@ -336,7 +336,8 @@ def ccitt_decode(data: bytes, columns: int = 1728, rows: int | None = None,
     """CCITTFaxDecode with PDF DecodeParms semantics -> packed 1-bit rows.
 
     ``rows`` (PDF /Rows, usually the image /Height) bounds the output; when
-    None, decoding continues until EOFB/RTC or data exhaustion."""
+    None, decoding continues until EOFB/RTC or the end of the data, where
+    fewer than 8 zero bits (the last byte's padding) count as the end."""
     if not isinstance(k, int):
         raise CcittError("K must be an integer")
     if k > 0:
@@ -357,17 +358,19 @@ def ccitt_decode(data: bytes, columns: int = 1728, rows: int | None = None,
         if byte_align:
             br.align()
         if k == 0:
-            # G3 1-D: rows may be preceded by EOLs; RTC (6 EOLs) ends
-            _skip_eol(br)
-            if br.exhausted():
+            # G3 1-D: a row may be preceded by an EOL; a second EOL in a
+            # row starts RTC (6 EOLs), which ends the data
+            if _skip_eol(br) and _skip_eol(br):
                 break
+        elif br.peek(2 * _EOL_BITS) == _EOFB:
+            br.skip(2 * _EOL_BITS)
+            break
+        left = br.nbits - br.pos
+        if left < 8 and br.peek(max(left, 0)) == 0:
+            break  # end of data, or the zero bits padding its last byte
+        if k == 0:
             trans = _decode_1d_row(br, columns)
         else:
-            if br.peek(2 * _EOL_BITS) == _EOFB:
-                br.skip(2 * _EOL_BITS)
-                break
-            if br.exhausted():
-                break
             trans = _decode_2d_row(br, ref, columns)
         out += _transitions_to_packed(trans, columns, black_is_1)
         if len(out) > _MAX_OUTPUT:

@@ -32,7 +32,8 @@ def sniff_kind(payload: bytes) -> str:
     PDFs frequently carry glued preamble junk (HTTP header fragments,
     chunked-encoding residue); viewers and MuPDF scan for the header the
     same way.  extract_document slices the preamble off before parsing
-    (xref offsets are relative to the header in such files)."""
+    (xref offsets are relative to the header in such files), and extracts
+    as raw text a payload that fails to parse and has no object in it."""
     if payload.startswith(b"%PDF-"):
         return "pdf"
     head = payload[:256]
@@ -58,14 +59,15 @@ def _counts(text: str) -> tuple[int, int]:
     return len(text), len(text.split())
 
 
-def _page(page_number: int, text: str, blocks=None, images=None,
-          tables=None, links=None) -> dict:
-    chars, words = _counts(text)
+def _page(page_number: int, text: str, word_count: int, blocks=None,
+          images=None, tables=None, links=None) -> dict:
+    """``word_count`` is ``len(text.split())``, which each kind derives
+    without re-splitting the page text."""
     return {
         "page_number": page_number,
         "text": text,
-        "char_count": chars,
-        "word_count": words,
+        "char_count": len(text),
+        "word_count": word_count,
         "blocks": blocks or [],
         "images": images or [],
         "tables": tables or [],
@@ -141,6 +143,59 @@ def _gunzip_bounded(payload: bytes) -> bytes:
             raise ValueError("trailing bytes after gzip member")
 
 
+def _pdf_pages(payload: bytes) -> tuple[list, str, dict]:
+    r = pdf.parse_pdf(payload)
+    pages = []
+    for pg in r["pages"]:
+        text = tokenizer.normalize_text(pg["text"])
+        pages.append(_page(
+            pg["page_number"], text, tokenizer.word_count(text),
+            blocks=[_unify_pdf_block(b) for b in pg["blocks"]],
+            images=[_unify_image(i) for i in pg["images"]],
+            tables=pg["tables"],
+            links=pg["links"],
+        ))
+    return pages, r["metadata"].get("Title", ""), r["metadata"]
+
+
+def _html_pages(payload: bytes) -> tuple[list, str, dict]:
+    r = dom.parse_html(payload)
+    # the page text is the content blocks (stripped, non-empty) joined by
+    # blank lines, so its words are theirs
+    words = sum(b["word_count"] for b in r["blocks"] if b["is_content"])
+    pages = [_page(1, r["text"], words,
+                   blocks=[_unify_dom_block(b) for b in r["blocks"]],
+                   tables=r["tables"], links=r["links"])]
+    meta = {"encoding": r["encoding"]}
+    # additive crawl-policy keys: absent when the doc declares neither
+    # (default corpus), so goldens stay byte-identical
+    if r.get("canonical"):
+        meta["canonical"] = r["canonical"]
+    if r.get("robots"):
+        meta["robots"] = r["robots"]
+    return pages, r["title"], meta
+
+
+def _raw_pages(payload: bytes) -> tuple[list, str, dict]:
+    r = tokenizer.tokenize_bytes(payload, sniff_meta=False)
+    text = r["text"]
+    blocks = []
+    for i, (s, e) in enumerate(r["spans"]):
+        btxt = text[s:e]
+        blocks.append({
+            "block_no": i, "tag": "span", "text": btxt,
+            "char_count": len(btxt), "word_count": tokenizer.word_count(btxt),
+            "x0": None, "y0": None, "x1": None, "y1": None,
+            "block_type": 0, "link_density": 0.0, "is_content": True,
+        })
+    # the spans are the text's paragraphs, so its words are theirs
+    words = sum(b["word_count"] for b in blocks)
+    return [_page(1, text, words, blocks=blocks)], "", {"encoding": r["encoding"]}
+
+
+_EXTRACTORS = {"pdf": _pdf_pages, "html": _html_pages, "raw": _raw_pages}
+
+
 def extract_document(payload: bytes) -> dict:
     """Single-pass extraction: bytes -> unified result tree.
 
@@ -160,60 +215,20 @@ def extract_document(payload: bytes) -> dict:
             }
     kind = sniff_kind(payload)
     try:
-        if kind == "pdf":
-            if not payload.startswith(b"%PDF-"):
-                # glued preamble junk before the header: offsets in such
-                # files are relative to the header (sniff_kind docstring)
-                payload = payload[payload.index(b"%PDF-"):]
-            r = pdf.parse_pdf(payload)
-            pages = [
-                _page(
-                    pg["page_number"],
-                    tokenizer.normalize_text(pg["text"]),
-                    blocks=[_unify_pdf_block(b) for b in pg["blocks"]],
-                    images=[_unify_image(i) for i in pg["images"]],
-                    tables=pg["tables"],
-                    links=pg["links"],
-                )
-                for pg in r["pages"]
-            ]
-            title = r["metadata"].get("Title", "")
-            meta = r["metadata"]
-        elif kind == "html":
-            r = dom.parse_html(payload)
-            pages = [
-                _page(
-                    1,
-                    r["text"],
-                    blocks=[_unify_dom_block(b) for b in r["blocks"]],
-                    tables=r["tables"],
-                    links=r["links"],
-                )
-            ]
-            title = r["title"]
-            meta = {"encoding": r["encoding"]}
-            # additive crawl-policy keys: absent when the doc declares
-            # neither (default corpus), so goldens stay byte-identical
-            if r.get("canonical"):
-                meta["canonical"] = r["canonical"]
-            if r.get("robots"):
-                meta["robots"] = r["robots"]
+        if kind == "pdf" and not payload.startswith(b"%PDF-"):
+            # glued preamble junk before the header: offsets in such files
+            # are relative to the header (sniff_kind docstring).  Text that
+            # merely mentions a header is not a PDF: when the sliced parse
+            # fails and no object was ever closed, extract it as raw.
+            try:
+                pages, title, meta = _pdf_pages(payload[payload.index(b"%PDF-"):])
+            except Exception:
+                if b"endobj" in payload:
+                    raise
+                kind = "raw"
+                pages, title, meta = _raw_pages(payload)
         else:
-            r = tokenizer.tokenize_bytes(payload, sniff_meta=False)
-            text = r["text"]
-            blocks = []
-            for i, (s, e) in enumerate(r["spans"]):
-                btxt = text[s:e]
-                chars, words = _counts(btxt)
-                blocks.append({
-                    "block_no": i, "tag": "span", "text": btxt,
-                    "char_count": chars, "word_count": words,
-                    "x0": None, "y0": None, "x1": None, "y1": None,
-                    "block_type": 0, "link_density": 0.0, "is_content": True,
-                })
-            pages = [_page(1, text, blocks=blocks)]
-            title = ""
-            meta = {"encoding": r["encoding"]}
+            pages, title, meta = _EXTRACTORS[kind](payload)
         return {
             "kind": kind, "status": "ok", "error": None,
             "title": title, "n_pages": len(pages), "pages": pages,

@@ -1,4 +1,4 @@
-"""DOM boilerplate stripper (SURVEY.md OP-64) — pure stdlib ``html.parser``.
+"""DOM boilerplate stripper (SURVEY.md OP-64) — one-pass regex tokenizer.
 
 Boilerpipe/trafilatura-style block classification: parse HTML into
 block-level text blocks, compute per-block text-density / link-density
@@ -13,16 +13,27 @@ extraction (/root/reference/pdf_extractor/extractors/table_extractor.py:65-135);
 cell cleaning (whitespace collapse, null->'' coalesce) stays relational
 (SURVEY.md OP-14/OP-15) — the kernel emits the raw ragged grid.
 
+The tokenizer emits exactly the start-tag / end-tag / data events of
+CPython 3.11's ``html.parser`` (``convert_charrefs=True``, one feed, then
+close), data-chunk boundaries included: ``n_links`` counts chunks inside
+anchors, and a chunk can open a ``_text`` block.  One compiled regex takes
+a text run plus a well-formed tag per step; other markup follows
+``html.parser``'s recovery rules.  One deliberate difference: a ``<![``
+section with an unknown keyword is a bogus comment up to the next ``>``
+(the HTML5 rule), where ``html.parser`` raised and lost the rest of the
+page.  Attributes are parsed only for the tags whose attributes are read.
+
 Deterministic: a pure function of the input bytes.  No wall clock, no I/O.
 """
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
 
-from .tokenizer import decode_bytes, normalize_text
+from .tokenizer import decode_bytes, normalize_text, word_count
 
-__all__ = ["parse_html", "Block"]
+__all__ = ["parse_html"]
 
 # Tags that open a new text block.
 _BLOCK_TAGS = {
@@ -39,226 +50,328 @@ MAX_LINK_DENSITY = 0.333  # boilerpipe-style: link-dominated block = nav
 MIN_CONTENT_WORDS = 8     # short isolated blocks are boilerplate
 HEADING_TAGS = {"h1", "h2", "h3", "h4", "h5", "h6"}
 _NOISE_TAGS = {"nav", "footer", "aside", "header"}
+# the tags whose attributes are read, and all tags that change _Doc state
+_ATTR_TAGS = {"a", "link", "meta"}
+_STATE_TAGS = _NOISE_TAGS | _ATTR_TAGS | {"title", "table", "tr", "td", "th"}
+
+# One step: a text run, its '<', then (optionally) a start tag whose
+# attributes are `name`, `name="v"`, `name='v'` or `name=v` apart by ASCII
+# whitespace, or an end tag.  Either alternative matches only markup that
+# html.parser reads as that same tag, `/>` included; the rest is _markup's.
+_NEXT = re.compile(r"""([^<]*)<(?:([a-zA-Z][^\t\n\r\f />\x00]*)
+    (?:[\t\n\r\f ]+[a-zA-Z_:][-a-zA-Z0-9_:.]*
+       (?:=(?:"[^"]*"|'[^']*'|[^\s"'=<>`]+))?)*[\t\n\r\f ]*(/?)>
+  |/\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>)?""", re.VERBOSE)
+# html.parser's own patterns (CPython 3.11 html/parser.py, _markupbase.py)
+_ATTR = r"""(?<=['"\s/])[^\s/>][^\s/=>]*"""
+_VALUE = r"""'[^']*'|"[^"]*"|(?!['"])[^>\s]*"""
+_STARTTAG_END = re.compile(r"<[a-zA-Z][^\t\n\r\f />\x00]*(?:[\s/]*(?:%s(?:\s*=+\s*(?:%s)\s*)?"
+                           r"(?:\s|/(?!>))*)*)?\s*" % (_ATTR, _VALUE))
+_ATTRFIND = re.compile(r"(%s)(\s*=+\s*(%s))?(?:\s|/(?!>))*" % (_ATTR, _VALUE))
+_TAGFIND = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
+_ENDTAG = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+_DECL_NAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*")
+_MARKED_CLOSE = {**dict.fromkeys(("temp", "cdata", "ignore", "include", "rcdata"),
+                                 re.compile(r"]\s*]\s*>")),
+                 **dict.fromkeys(("if", "else", "endif"), re.compile(r"]\s*>"))}
+# html.parser ends script/style raw text at `</\s*script\s*>` under re.I, but
+# skips a match whose name holds a non-ASCII case-fold (`ſ`, `K`): ASCII-only
+# case-insensitivity finds the same close
+_RAW_TEXT_END = {t: re.compile(r"</\s*(?ai:%s)\s*>" % t) for t in ("script", "style")}
+# next after html.parser's readable part of a start tag: the tag is cut short
+_INCOMPLETE = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/")
 
 
-class Block:
-    """One block-level text run with its classification features."""
+class _Block:
+    __slots__ = ("tag", "in_noise", "parts", "link_chars", "n_links")
 
-    __slots__ = ("tag", "depth", "parts", "link_chars", "n_links", "in_noise")
-
-    def __init__(self, tag: str, depth: int, in_noise: bool) -> None:
-        self.tag = tag
-        self.depth = depth
-        self.parts: list[str] = []
-        self.link_chars = 0
-        self.n_links = 0
-        self.in_noise = in_noise
-
-    @property
-    def text(self) -> str:
-        return normalize_text("".join(self.parts))
+    def __init__(self, tag: str, in_noise: bool) -> None:
+        self.tag, self.in_noise, self.parts, self.link_chars, self.n_links = \
+            tag, in_noise, [], 0, 0
 
 
-class _Extractor(HTMLParser):
+class _Doc:
+    """Block / link / table / title / canonical / robots state, fed one
+    event at a time: start, startend, end (lowercase tag) and data."""
+
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
+        self.blocks: list[_Block] = []
         self.links: list[str] = []
         self.tables: list[list[list[str | None]]] = []
         self.title_parts: list[str] = []
         self.canonical: str | None = None  # first <link rel=canonical href>
         self.robots: str | None = None     # first <meta name=robots content>
-        self._cur: Block | None = None
-        self._skip_depth = 0
-        self._anchor_depth = 0
-        self._noise_depth = 0
-        self._depth = 0
-        self._in_title = False
-        # table state
-        self._table_stack: list[list[list[str | None]]] = []
-        self._row: list[str | None] | None = None
-        self._cell: list[str] | None = None
-        self._cell_seen_text = False
+        self.cur: _Block | None = None
+        self.skip = self.anchors = self.noise = 0  # open element depths
+        self.in_title = self.cell_seen_text = False
+        self.table_stack: list[list[list[str | None]]] = []
+        self.row: list[str | None] | None = None
+        self.cell: list[str] | None = None
 
-    # -- block management -------------------------------------------------
-    def _open_block(self, tag: str) -> None:
-        self._cur = Block(tag, self._depth, self._noise_depth > 0)
-        self.blocks.append(self._cur)
-
-    def handle_starttag(self, tag, attrs):
-        self._depth += 1
+    def start(self, tag: str, attrs) -> None:
         if tag in _SKIP_TAGS:
-            self._skip_depth += 1
+            self.skip += 1
+        elif self.skip:
             return
-        if self._skip_depth:
+        elif tag in _STATE_TAGS:
+            if tag in _NOISE_TAGS:
+                self.noise += 1
+            elif tag == "a":
+                self.anchors += 1
+                href = dict(attrs).get("href")
+                if href:  # URI presence predicate (OP-31)
+                    self.links.append(href)
+            elif tag == "title":
+                self.in_title = True
+            elif tag == "link" and self.canonical is None:
+                a = dict(attrs)
+                if (a.get("rel") or "").strip().lower() == "canonical" \
+                        and (a.get("href") or "").strip():
+                    self.canonical = a["href"].strip()
+            elif tag == "meta" and self.robots is None:
+                a = dict(attrs)
+                if (a.get("name") or "").strip().lower() == "robots":
+                    # normalize the directive list: lowercase, trim each
+                    # token, canonical ', ' separator — crawl policy
+                    # compares tokens, not author formatting
+                    toks = (t.strip() for t in (a.get("content") or "").lower().split(","))
+                    self.robots = ", ".join(t for t in toks if t) or None
+            elif tag == "table":
+                self.table_stack.append([])
+            elif tag == "tr":
+                if self.table_stack:
+                    self.row = []
+            elif tag in ("td", "th") and self.table_stack:
+                self.cell = []
+                self.cell_seen_text = False
+        if tag in _BLOCK_TAGS and not self.skip:
+            self.cur = _Block(tag, self.noise > 0)
+            self.blocks.append(self.cur)
+
+    def startend(self, tag: str, attrs) -> None:
+        if tag == "br" and self.cur is not None:
+            self.cur.parts.append("\n")
+        elif tag != "img":
+            self.start(tag, attrs)
+            self.end(tag)
+
+    def end(self, tag: str) -> None:
+        if tag in _SKIP_TAGS:
+            self.skip = max(0, self.skip - 1)
             return
-        if tag in _NOISE_TAGS:
-            self._noise_depth += 1
-        if tag == "a":
-            self._anchor_depth += 1
-            href = dict(attrs).get("href")
-            if href:  # URI presence predicate (OP-31)
-                self.links.append(href)
-        if tag == "title":
-            self._in_title = True
-        if tag == "link" and self.canonical is None:
-            a = dict(attrs)
-            if (a.get("rel") or "").strip().lower() == "canonical" \
-                    and (a.get("href") or "").strip():
-                self.canonical = a["href"].strip()
-        if tag == "meta" and self.robots is None:
-            a = dict(attrs)
-            if (a.get("name") or "").strip().lower() == "robots":
-                # normalize the directive list: lowercase, trim each token,
-                # canonical ', ' separator — crawl policy compares tokens,
-                # not author formatting
-                toks = [t.strip() for t in (a.get("content") or "")
-                        .lower().split(",")]
-                norm = ", ".join(t for t in toks if t)
-                if norm:
-                    self.robots = norm
-        if tag == "table":
-            self._table_stack.append([])
-        elif tag == "tr" and self._table_stack:
-            self._row = []
-        elif tag in ("td", "th") and self._table_stack:
-            self._cell = []
-            self._cell_seen_text = False
+        if self.skip:
+            return
+        if tag in _STATE_TAGS:
+            if tag in _NOISE_TAGS:
+                self.noise = max(0, self.noise - 1)
+            elif tag == "a":
+                self.anchors = max(0, self.anchors - 1)
+            elif tag == "title":
+                self.in_title = False
+            elif tag in ("td", "th"):
+                if self.cell is not None and self.row is not None:
+                    # None-cell fidelity: pdfplumber yields None for empty
+                    # cells (coalesced relationally per OP-15) — mirror that.
+                    self.row.append("".join(self.cell) if self.cell_seen_text else None)
+                    self.cell = None
+            elif tag == "tr":
+                if self.row is not None and self.table_stack:
+                    self.table_stack[-1].append(self.row)
+                    self.row = None
+            elif tag == "table" and self.table_stack:
+                self.tables.append(self.table_stack.pop())
         if tag in _BLOCK_TAGS:
-            self._open_block(tag)
+            self.cur = None
 
-    def handle_startendtag(self, tag, attrs):
-        if tag == "br" and self._cur is not None:
-            self._cur.parts.append("\n")
-        elif tag == "img":
-            pass
-        else:
-            self.handle_starttag(tag, attrs)
-            self.handle_endtag(tag)
-
-    def handle_endtag(self, tag):
-        self._depth = max(0, self._depth - 1)
-        if tag in _SKIP_TAGS:
-            self._skip_depth = max(0, self._skip_depth - 1)
+    def data(self, data: str) -> None:
+        if self.skip:
             return
-        if self._skip_depth:
-            return
-        if tag in _NOISE_TAGS:
-            self._noise_depth = max(0, self._noise_depth - 1)
-        if tag == "a":
-            self._anchor_depth = max(0, self._anchor_depth - 1)
-        if tag == "title":
-            self._in_title = False
-        if tag in ("td", "th") and self._cell is not None and self._row is not None:
-            # None-cell fidelity: pdfplumber yields None for empty cells
-            # (coalesced relationally per OP-15) — mirror that here.
-            raw = "".join(self._cell)
-            self._row.append(raw if self._cell_seen_text else None)
-            self._cell = None
-        elif tag == "tr" and self._row is not None and self._table_stack:
-            self._table_stack[-1].append(self._row)
-            self._row = None
-        elif tag == "table" and self._table_stack:
-            self.tables.append(self._table_stack.pop())
-        if tag in _BLOCK_TAGS and self._cur is not None:
-            self._cur = None
-
-    def handle_data(self, data):
-        if self._skip_depth:
-            return
-        if self._in_title:
+        if self.in_title:
             self.title_parts.append(data)
-        if self._cell is not None:
-            self._cell.append(data)
-            if data.strip():
-                self._cell_seen_text = True
-        if self._cur is None and data.strip():
-            self._open_block("_text")
-        if self._cur is not None:
-            self._cur.parts.append(data)
-            if self._anchor_depth:
-                self._cur.link_chars += len(data)
-                self._cur.n_links += 1
+        if self.cell is not None:
+            self.cell.append(data)
+            self.cell_seen_text = self.cell_seen_text or bool(data.strip())
+        cur = self.cur
+        if cur is None:
+            if not data.strip():
+                return
+            cur = self.cur = _Block("_text", self.noise > 0)
+            self.blocks.append(cur)
+        cur.parts.append(data)
+        if self.anchors:
+            cur.link_chars += len(data)
+            cur.n_links += 1
+
+
+def _tokenize(raw: str, doc: _Doc) -> None:
+    """Feed ``doc`` the events html.parser emits for ``raw``."""
+    data, start, end, match = doc.data, doc.start, doc.end, _NEXT.match
+    i = 0
+    while i >= 0:
+        m = match(raw, i)
+        if m is None:  # no '<' left: the rest is one chunk
+            if i < len(raw):
+                data(unescape(raw[i:]))
+            return
+        text, tag, slash, etag = m.groups()
+        if text:
+            data(unescape(text) if "&" in text else text)
+        i = m.end()
+        if etag:
+            end(etag.lower())
+        elif tag:
+            tag = tag.lower()
+            if slash or tag in _ATTR_TAGS or tag in _RAW_TEXT_END:
+                i = _tag(raw, m.end(1), i, tag, slash == "/", doc)
+            else:
+                start(tag, ())
+        else:
+            i = _markup(raw, i - 1, doc)
+
+
+def _attrs(raw: str, i: int, endpos: int) -> tuple[list, int]:
+    """(attrs, end of the last one) of the start tag at raw[i:endpos], as
+    html.parser reads them."""
+    k = _TAGFIND.match(raw, i + 1).end()
+    attrs = []
+    while k < endpos and (m := _ATTRFIND.match(raw, k)):
+        name, rest, value = m.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        attrs.append((name.lower(), unescape(value) if value else value))
+        k = m.end()
+    return attrs, k
+
+
+def _tag(raw: str, i: int, endpos: int, tag: str, self_closing: bool, doc: _Doc) -> int:
+    """Emit the start tag at raw[i:endpos]; return where tokenizing goes on
+    (-1: a script/style element never closes, and html.parser drops the
+    rest).  Script/style raw text is never emitted: the element is in
+    _SKIP_TAGS, so _Doc.data would drop it."""
+    attrs = _attrs(raw, i, endpos)[0] if tag in _ATTR_TAGS else ()
+    if self_closing:
+        doc.startend(tag, attrs)
+        return endpos
+    doc.start(tag, attrs)
+    if tag not in _RAW_TEXT_END:
+        return endpos
+    m = _RAW_TEXT_END[tag].search(raw, endpos)
+    if m is None:
+        return -1
+    doc.end(tag)
+    return m.end()
+
+
+def _markup(raw: str, i: int, doc: _Doc) -> int:
+    """Whatever starts at the '<' raw[i] when _NEXT took no tag there, by
+    html.parser's rules; returns the index after it."""
+    if raw[i + 1:i + 2].isascii() and raw[i + 1:i + 2].isalpha():
+        k = _starttag(raw, i, doc)
+    elif raw.startswith("</", i):
+        k = raw.find(">", i + 1)
+        if k >= 0:
+            m = _ENDTAG.match(raw, i) or _TAGFIND.match(raw, i + 2)
+            if m:  # else `</>` or a bogus comment, both up to that '>'
+                doc.end(m.group(1).lower())
+            k += 1
+    elif raw.startswith("<!--", i):
+        m = _COMMENT_CLOSE.search(raw, i + 4)
+        k = m.end() if m else -1
+    elif raw.startswith(("<!", "<?"), i):
+        m = raw.startswith("<![", i) and _DECL_NAME.match(raw, i + 3)
+        close = m and _MARKED_CLOSE.get(m.group().lower())
+        if close:  # a marked section
+            m = close.search(raw, i + 3)
+            k = m.end() if m else -1
+        else:  # doctype, processing instruction or bogus comment
+            k = raw.find(">", i + 2) + 1 or -1
+    else:  # a lone '<' is a chunk of its own
+        doc.data("<")
+        return i + 1
+    if k < 0:  # unterminated: up to its '>' (else the next '<') is text
+        k = raw.find(">", i + 1) + 1 or raw.find("<", i + 1)
+        k = k if k > 0 else i + 1
+        doc.data(unescape(raw[i:k]))
+    return k
+
+
+def _starttag(raw: str, i: int, doc: _Doc) -> int:
+    j = _STARTTAG_END.match(raw, i).end()
+    nxt = raw[j:j + 1]
+    if nxt == ">":
+        endpos = j + 1
+    elif raw.startswith("/>", j):
+        endpos = j + 2
+    elif not nxt or nxt in _INCOMPLETE:
+        return -1
+    else:
+        endpos = j
+    tail = raw[_attrs(raw, i, endpos)[1]:endpos].strip()
+    if tail not in (">", "/>"):
+        doc.data(raw[i:endpos])
+        return endpos
+    tag = _TAGFIND.match(raw, i + 1).group(1).lower()
+    return _tag(raw, i, endpos, tag, tail == "/>", doc)
 
 
 def _classify(blocks: list[dict]) -> None:
     """Boilerpipe-style two-pass classification; mutates ``is_content``."""
     for b in blocks:
-        ld = b["link_density"]
-        words = b["word_count"]
-        if b["in_noise"] or b["tag"] == "title":
-            b["is_content"] = False
-        elif b["tag"] in HEADING_TAGS:
-            b["is_content"] = words >= 1 and ld <= MAX_LINK_DENSITY
-        else:
-            b["is_content"] = words >= MIN_CONTENT_WORDS and ld <= MAX_LINK_DENSITY
-    # smoothing pass: promote short low-link blocks sandwiched between content
-    for i, b in enumerate(blocks):
-        if b["is_content"] or b["in_noise"] or not b["word_count"]:
-            continue
-        if b["link_density"] > MAX_LINK_DENSITY or b["tag"] == "title":
-            continue
-        prev_c = any(p["is_content"] for p in blocks[max(0, i - 1):i])
-        next_c = any(n["is_content"] for n in blocks[i + 1:i + 2])
-        if prev_c and next_c:
+        min_words = 1 if b["tag"] in HEADING_TAGS else MIN_CONTENT_WORDS
+        b["is_content"] = not (b["in_noise"] or b["tag"] == "title") and \
+            b["word_count"] >= min_words and b["link_density"] <= MAX_LINK_DENSITY
+    # smoothing pass: promote short low-link blocks sandwiched between
+    # content (left to right: a promoted block counts for its successor)
+    for prev, b, nxt in zip(blocks, blocks[1:], blocks[2:]):
+        if not (b["is_content"] or b["in_noise"] or b["tag"] == "title") \
+                and b["word_count"] and b["link_density"] <= MAX_LINK_DENSITY \
+                and prev["is_content"] and nxt["is_content"]:
             b["is_content"] = True
-    # demote headings with no following content (trailing boilerplate)
-    for i, b in enumerate(blocks):
-        if b["is_content"] and b["tag"] in HEADING_TAGS:
-            if not any(n["is_content"] and n["tag"] not in HEADING_TAGS
-                       for n in blocks[i + 1:]):
-                b["is_content"] = False
+    # demote headings with no non-heading content after them (trailing
+    # boilerplate)
+    last = max((i for i, b in enumerate(blocks)
+                if b["is_content"] and b["tag"] not in HEADING_TAGS), default=-1)
+    for b in blocks[last + 1:]:
+        if b["tag"] in HEADING_TAGS:
+            b["is_content"] = False
 
 
 def parse_html(data: bytes) -> dict:
     """OP-64 kernel: HTML bytes -> extraction dict.
 
-    Returns {title, text, blocks, links, tables, encoding}; ``text`` is the
-    main content (content blocks joined by blank lines, normalized).
+    Returns {title, text, blocks, links, tables, encoding, canonical,
+    robots}; ``text`` is the main content (content blocks joined by blank
+    lines, normalized).
     """
     raw, enc = decode_bytes(data, sniff_meta=True)
-    p = _Extractor()
-    try:
-        p.feed(raw)
-        p.close()
-    except Exception:
-        # html.parser is forgiving; treat residual errors as truncated input
-        pass
+    doc = _Doc()
+    _tokenize(raw, doc)
+    return _result(doc, enc)
 
+
+def _result(doc: _Doc, enc: str) -> dict:
     blocks: list[dict] = []
-    idx = 0
-    for blk in p.blocks:
-        text = blk.text
-        if not text:
-            continue
-        chars = len(text)
-        words = len(text.split())
-        ld = min(1.0, blk.link_chars / chars) if chars else 0.0
-        blocks.append({
-            "block_no": idx,
-            "tag": blk.tag,
-            "text": text,
-            "char_count": chars,
-            "word_count": words,
-            "n_links": blk.n_links,
-            "link_density": round(ld, 6),
-            "in_noise": blk.in_noise,
-            "is_content": False,
-        })
-        idx += 1
+    for blk in doc.blocks:
+        text = normalize_text("".join(blk.parts))
+        if text:
+            blocks.append({
+                "block_no": len(blocks), "tag": blk.tag, "text": text,
+                "char_count": len(text), "word_count": word_count(text),
+                "n_links": blk.n_links,
+                "link_density": round(min(1.0, blk.link_chars / len(text)), 6)
+                if blk.link_chars else 0.0,
+                "in_noise": blk.in_noise, "is_content": False,
+            })
     _classify(blocks)
-
-    main_text = "\n\n".join(b["text"] for b in blocks if b["is_content"])
     return {
-        "title": normalize_text("".join(p.title_parts)),
-        "text": main_text,
-        "blocks": blocks,
-        "links": p.links,
-        "tables": p.tables,
-        "encoding": enc,
+        "title": normalize_text("".join(doc.title_parts)),
+        "text": "\n\n".join(b["text"] for b in blocks if b["is_content"]),
+        "blocks": blocks, "links": doc.links, "tables": doc.tables, "encoding": enc,
         # crawl-policy metadata (first occurrence wins, per WHATWG
         # duplicate-handling): canonical URL and normalized robots
         # directives; None when the document declares neither
-        "canonical": p.canonical,
-        "robots": p.robots,
+        "canonical": doc.canonical, "robots": doc.robots,
     }

@@ -750,6 +750,21 @@ def _encode_stream(enc_rng: random.Random, content: bytes) -> tuple[bytes, bytes
     )
 
 
+def plan_pages(rng: random.Random, n_pages: int | None = None,
+               charset: str = "latin") -> list[list[str]]:
+    """make_pdf's page plan, its first rng draws: the page count (unless
+    given), then each page's paragraphs.  Counting a document's pages
+    needs only this, not the serialization."""
+    if n_pages is None:
+        n_pages = rng.randint(1, 4)
+    if charset == "latin":
+        pool, extra = _WORDS, _LATIN1_EXTRA
+    else:
+        pool, extra = _CJK_POOLS[charset], None
+    return [[_sentence(rng, rng.randint(4, 9), pool=pool, extra=extra)
+             for _ in range(rng.randint(3, 10))] for _ in range(n_pages)]
+
+
 def make_pdf(rng: random.Random, doc_id: int, n_pages: int | None = None,
              with_images: bool = True, dialect: str = "classic",
              font: str = "simple", encrypt: str | None = None,
@@ -859,22 +874,11 @@ def make_pdf(rng: random.Random, doc_id: int, n_pages: int | None = None,
     non-stream objects live inside the (already encrypted) ObjStm and keep
     plaintext strings, per spec.  No rng draws — TEXT is invariant.
     """
-    if n_pages is None:
-        n_pages = rng.randint(1, 4)
-    if page_tables is not None and len(page_tables) != n_pages:
+    page_paras = plan_pages(rng, n_pages, charset)
+    if page_tables is not None and len(page_tables) != len(page_paras):
         raise ValueError("page_tables length must equal n_pages")
-    if page_links is not None and len(page_links) != n_pages:
+    if page_links is not None and len(page_links) != len(page_paras):
         raise ValueError("page_links length must equal n_pages")
-    if charset == "latin":
-        pool, extra = _WORDS, _LATIN1_EXTRA
-    else:
-        pool, extra = _CJK_POOLS[charset], None
-    page_paras: list[list[str]] = []
-    for _ in range(n_pages):
-        n = rng.randint(3, 10)
-        page_paras.append([
-            _sentence(rng, rng.randint(4, 9), pool=pool, extra=extra)
-            for _ in range(n)])
     # expected reading-order lines = paragraphs, then the grid rows below
     page_lines = [list(p) for p in page_paras]
     if page_tables is not None:

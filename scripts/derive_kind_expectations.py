@@ -24,7 +24,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pdf_extractor_spark.sources.synth import gen_doc, make_pdf  # noqa: E402
+from pdf_extractor_spark.sources.synth import gen_doc, plan_pages  # noqa: E402
 
 
 def kind_expectations(n_docs: int = 300, seed: int = 42) -> dict[str, tuple[int, int]]:
@@ -40,31 +40,23 @@ def kind_expectations(n_docs: int = 300, seed: int = 42) -> dict[str, tuple[int,
 
 
 def twin_total_pages(name: str) -> int:
-    """Planned page total of one _TWIN_GATES row: the page line lists
-    make_pdf plans for each doc's variant route (the page plan is the
-    generator's first rng draw, so both routes plan the same pages)."""
+    """Planned page total of one _TWIN_GATES row: make_pdf's page plan
+    (plan_pages, its first rng draws) for each doc's variant route; both
+    routes draw the same plan."""
     from pdf_extractor_spark.operators.pipeline_queries import _TWIN_GATES
 
     tag, n_docs, _total, routes = _TWIN_GATES[name]
-    total = 0
-    for doc_id in range(n_docs):
-        kw = {"dialect": "modern" if doc_id % 2 else "classic",
-              **routes[doc_id % len(routes)][1]}
-        _, lines = make_pdf(random.Random(f"{tag}:{doc_id}"), doc_id, **kw)
-        total += len(lines)
-    return total
+    return sum(
+        len(plan_pages(random.Random(f"{tag}:{doc_id}"),
+                       charset=routes[doc_id % len(routes)][1].get("charset", "latin")))
+        for doc_id in range(n_docs))
 
 
 def ccitt_total_pages(n_docs: int = 60) -> int:
-    """Planned page total of the q_ccitt fixture set (page plan is
-    image-coding-invariant — same rng draw sequence either way)."""
-    total = 0
-    for doc_id in range(n_docs):
-        rng = random.Random(f"ccitt-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id, image_coding="flate-gray",
-                            dialect="modern" if doc_id % 2 else "classic")
-        total += len(lines)
-    return total
+    """Planned page total of the q_ccitt fixture set (the page plan does
+    not depend on the image coding)."""
+    return sum(len(plan_pages(random.Random(f"ccitt-gate:{doc_id}")))
+               for doc_id in range(n_docs))
 
 
 def table_merge_totals(n_docs: int = 50) -> int:
@@ -122,14 +114,8 @@ def links_total(n_docs: int = 80) -> int:
 def crypt_total_pages(n_docs: int = 60) -> int:
     """Planned page total of the q_pdf_encrypted fixture set (page plan is
     encryption-invariant — the encryptor draws nothing from the main rng)."""
-    total = 0
-    for doc_id in range(n_docs):
-        rng = random.Random(f"crypt-gate:{doc_id}")
-        _, lines = make_pdf(rng, doc_id,
-                            dialect="modern" if doc_id % 2 else "classic",
-                            font="cid" if doc_id % 4 >= 2 else "simple")
-        total += len(lines)
-    return total
+    return sum(len(plan_pages(random.Random(f"crypt-gate:{doc_id}")))
+               for doc_id in range(n_docs))
 
 
 if __name__ == "__main__":

@@ -165,3 +165,43 @@ class TestPdfIntegration:
             parse_pdf(bad)
         except PdfError:
             pass  # acceptable: honest error-route
+
+
+class TestWithoutRows:
+    """/Rows absent (rows=None, PDF default 0 = decode to the end of the
+    data): the zero bits padding the last byte and a G3 RTC end decoding
+    instead of error-routing the image."""
+
+    @staticmethod
+    def _rasters():
+        rnd = random.Random(21)
+        for _ in range(40):
+            w, h = rnd.randint(1, 200), rnd.randint(1, 30)
+            yield w, h, bilevel_gradient(w, h, bytes(
+                rnd.randrange(256) for _ in range(8)))
+
+    @pytest.mark.parametrize("encode,k", [
+        (encode_g3_1d, 0),
+        (lambda g, w, h: encode_g4(g, w, h, with_eofb=False), -1),
+        (encode_g4, -1),
+    ])
+    def test_rows_none_equals_rows_height(self, encode, k):
+        for w, h, gray in self._rasters():
+            enc = encode(gray, w, h)
+            want = ccitt_decode(enc, columns=w, rows=h, k=k)
+            assert ccitt_decode(enc, columns=w, rows=None, k=k) == want
+
+    def test_g3_rtc_ends_data(self):
+        from pdf_extractor_spark.sources.synth_ccitt import _run_bits
+
+        eol = "000000000001"
+        w = 24
+        rows = [bytes([0xFF] * 12 + [0] * 12), bytes([0xFF] * 20 + [0] * 4)]
+        bits = "".join(eol + _run_bits(white, True) + _run_bits(w - white, False)
+                       for white in (12, 20))
+        bits += eol * 6 + "1010"  # RTC, then bits that are never read
+        bits += "0" * (-len(bits) % 8)
+        data = int(bits, 2).to_bytes(len(bits) // 8, "big")
+        out = ccitt_decode(data, columns=w, rows=None, k=0)
+        assert unpack_bilevel(out, w, 2) == b"".join(rows)
+        assert ccitt_decode(data, columns=w, rows=2, k=0) == out

@@ -94,6 +94,20 @@ class TestPdfPreamble:
                 b'</p></article></body></html>')
         assert extract_document(html)["kind"] == "html"
 
+    def test_text_mentioning_pdf_magic_extracts_as_raw(self):
+        text = (b"Release notes\n\nThe exporter now writes a %PDF-1.4 header "
+                b"and a startxref trailer.\n")
+        r = extract_document(text)
+        assert (r["kind"], r["status"]) == ("raw", "ok")
+        assert "%PDF-1.4 header" in r["pages"][0]["text"]
+
+    def test_broken_glued_pdf_still_error_routes(self):
+        # object structure present: a failed parse is a broken PDF, never
+        # binary soup returned as raw text
+        pdf, _ = make_pdf(random.Random("pre:3"), 3)
+        r = extract_document(b"junk\r\n" + pdf[:len(pdf) // 2])
+        assert (r["kind"], r["status"]) == ("pdf", "error")
+
     def test_deep_magic_not_sniffed(self):
         # the scan window is 1 KiB: %PDF- beyond it stays raw
         r = extract_document(b"\x00" * 2000 + b"%PDF-1.4")

@@ -99,3 +99,50 @@ def test_hspace_fast_path_equivalence():
     for _ in range(20000):
         s = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12)))
         assert canonical_whitespace(s) == _HSPACE_RE.sub(" ", s).strip(), repr(s)
+
+
+def test_hspace_identity_fast_path_beyond_ascii():
+    """Non-ASCII lines skip the _HSPACE_RE sub when it is the identity;
+    the result must equal the full pipeline on lines and multi-line text."""
+    import random
+
+    from pdf_extractor_spark.kernels.tokenizer import _HSPACE_RE, _MULTI_NL_RE
+
+    rng = random.Random(11)
+    alphabet = (list("ab c\t\n") +
+                ["\xe9", "\xdf", "\u6f22", "\xa0", "\u2000", "\u3000", "\u202f",
+                 "\u205f", "\u200a", "\u1680", "\u200b", "\x0b", "\x85", "  ", "\r\n"])
+    for _ in range(20000):
+        s = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 14)))
+        lines = s.replace("\r\n", "\n").replace("\r", "\n").split("\n")
+        want = _MULTI_NL_RE.sub(
+            "\n\n", "\n".join(_HSPACE_RE.sub(" ", ln).strip() for ln in lines)).strip()
+        assert canonical_whitespace(s) == want, repr(s)
+
+
+def test_every_split_separator_but_space_is_unprintable():
+    """word_count's premise: a printable string's only str.split()
+    separator is ' ' (checked over every code point)."""
+    import sys
+
+    seps = [c for c in map(chr, range(sys.maxunicode + 1))
+            if len(("a" + c + "b").split()) == 2]
+    assert " " in seps and len(seps) > 20
+    assert [c for c in seps if c != " " and c.isprintable()] == []
+
+
+def test_word_count_equals_split_on_canonical_text():
+    import random
+
+    from pdf_extractor_spark.kernels.tokenizer import word_count
+
+    rng = random.Random(12)
+    alphabet = list("ab c\t\n\n") + ["\xe9", "\xa0", "\u3000", "\x0b", "\x1c",
+                                       "\u2028", "\x85", "\u1680", "  ", "\u200b"]
+    for _ in range(20000):
+        text = normalize_text("".join(rng.choice(alphabet)
+                                      for _ in range(rng.randint(0, 16))))
+        assert word_count(text) == len(text.split()), repr(text)
+    # paragraphs of canonical text (the raw kernel's blocks) qualify too
+    text = normalize_text("one two\nthree\n\n\nfour \u3000five")
+    assert [word_count(text[s:e]) for s, e in paragraph_spans(text)] == [3, 2]
