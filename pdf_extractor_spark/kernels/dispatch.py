@@ -18,10 +18,13 @@ dicts: pages -> texts/blocks/images/tables with derived char/word counts
 
 from __future__ import annotations
 
+import re
+
 from . import dom, pdf, tokenizer
 
 __all__ = ["sniff_kind", "extract_document", "assemble_doc_text", "PAGE_BANNER"]
 
+_OBJ_HEADER = re.compile(rb"\d+\s+\d+\s+obj\b")
 _BOMS = (b"\xef\xbb\xbf", b"\xff\xfe", b"\xfe\xff", b"\xff\xfe\x00\x00", b"\x00\x00\xfe\xff")
 
 
@@ -219,11 +222,12 @@ def extract_document(payload: bytes) -> dict:
             # glued preamble junk before the header: offsets in such files
             # are relative to the header (sniff_kind docstring).  Text that
             # merely mentions a header is not a PDF: when the sliced parse
-            # fails and no object was ever closed, extract it as raw.
+            # fails and no object header (`N G obj`) appears, extract it as
+            # raw.
             try:
                 pages, title, meta = _pdf_pages(payload[payload.index(b"%PDF-"):])
             except Exception:
-                if b"endobj" in payload:
+                if _OBJ_HEADER.search(payload):
                     raise
                 kind = "raw"
                 pages, title, meta = _raw_pages(payload)

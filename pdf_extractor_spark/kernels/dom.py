@@ -16,12 +16,12 @@ cell cleaning (whitespace collapse, null->'' coalesce) stays relational
 The tokenizer emits exactly the start-tag / end-tag / data events of
 CPython 3.11's ``html.parser`` (``convert_charrefs=True``, one feed, then
 close), data-chunk boundaries included: ``n_links`` counts chunks inside
-anchors, and a chunk can open a ``_text`` block.  One compiled regex takes
-a text run plus a well-formed tag per step; other markup follows
-``html.parser``'s recovery rules.  One deliberate difference: a ``<![``
-section with an unknown keyword is a bogus comment up to the next ``>``
-(the HTML5 rule), where ``html.parser`` raised and lost the rest of the
-page.  Attributes are parsed only for the tags whose attributes are read.
+anchors, and a chunk can open a ``_text`` block.  Each step takes a text
+run and the markup at its ``<``, read with ``html.parser``'s own patterns
+and recovery rules.  One deliberate difference: a ``<![`` section with an
+unknown keyword is a bogus comment up to the next ``>`` (the HTML5 rule),
+where ``html.parser`` raised and lost the rest of the page.  Attributes
+are parsed only for the tags whose attributes are read.
 
 Deterministic: a pure function of the input bytes.  No wall clock, no I/O.
 """
@@ -54,22 +54,17 @@ _NOISE_TAGS = {"nav", "footer", "aside", "header"}
 _ATTR_TAGS = {"a", "link", "meta"}
 _STATE_TAGS = _NOISE_TAGS | _ATTR_TAGS | {"title", "table", "tr", "td", "th"}
 
-# One step: a text run, its '<', then (optionally) a start tag whose
-# attributes are `name`, `name="v"`, `name='v'` or `name=v` apart by ASCII
-# whitespace, or an end tag.  Either alternative matches only markup that
-# html.parser reads as that same tag, `/>` included; the rest is _markup's.
-_NEXT = re.compile(r"""([^<]*)<(?:([a-zA-Z][^\t\n\r\f />\x00]*)
-    (?:[\t\n\r\f ]+[a-zA-Z_:][-a-zA-Z0-9_:.]*
-       (?:=(?:"[^"]*"|'[^']*'|[^\s"'=<>`]+))?)*[\t\n\r\f ]*(/?)>
-  |/\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>)?""", re.VERBOSE)
 # html.parser's own patterns (CPython 3.11 html/parser.py, _markupbase.py)
 _ATTR = r"""(?<=['"\s/])[^\s/>][^\s/=>]*"""
 _VALUE = r"""'[^']*'|"[^"]*"|(?!['"])[^>\s]*"""
-_STARTTAG_END = re.compile(r"<[a-zA-Z][^\t\n\r\f />\x00]*(?:[\s/]*(?:%s(?:\s*=+\s*(?:%s)\s*)?"
-                           r"(?:\s|/(?!>))*)*)?\s*" % (_ATTR, _VALUE))
 _ATTRFIND = re.compile(r"(%s)(\s*=+\s*(%s))?(?:\s|/(?!>))*" % (_ATTR, _VALUE))
 _TAGFIND = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
-_ENDTAG = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+# One step: a text run, then its '<': a well-formed end tag (endtagfind), a
+# start tag up to where html.parser stops reading it (locatestarttagend),
+# or whatever _markup reads there
+_NEXT = re.compile(r"""([^<]*)(?:</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>
+  |<([a-zA-Z][^\t\n\r\f\ />\x00]*)(?:[\s/]*(?:%s(?:\s*=+\s*(?:%s)\s*)?(?:\s|/(?!>))*)*)?\s*
+  |<)""" % (_ATTR, _VALUE), re.VERBOSE)
 _COMMENT_CLOSE = re.compile(r"--\s*>")
 _DECL_NAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*")
 _MARKED_CLOSE = {**dict.fromkeys(("temp", "cdata", "ignore", "include", "rcdata"),
@@ -206,74 +201,33 @@ class _Doc:
 
 def _tokenize(raw: str, doc: _Doc) -> None:
     """Feed ``doc`` the events html.parser emits for ``raw``."""
-    data, start, end, match = doc.data, doc.start, doc.end, _NEXT.match
+    data, end, match = doc.data, doc.end, _NEXT.match
     i = 0
-    while i >= 0:
+    while True:
         m = match(raw, i)
         if m is None:  # no '<' left: the rest is one chunk
             if i < len(raw):
                 data(unescape(raw[i:]))
             return
-        text, tag, slash, etag = m.groups()
+        text, etag, stag = m.groups()
         if text:
             data(unescape(text) if "&" in text else text)
         i = m.end()
         if etag:
             end(etag.lower())
-        elif tag:
-            tag = tag.lower()
-            if slash or tag in _ATTR_TAGS or tag in _RAW_TEXT_END:
-                i = _tag(raw, m.end(1), i, tag, slash == "/", doc)
-            else:
-                start(tag, ())
+        elif stag:
+            i = _starttag(raw, m.start(3) - 1, i, stag, doc)
         else:
             i = _markup(raw, i - 1, doc)
 
 
-def _attrs(raw: str, i: int, endpos: int) -> tuple[list, int]:
-    """(attrs, end of the last one) of the start tag at raw[i:endpos], as
-    html.parser reads them."""
-    k = _TAGFIND.match(raw, i + 1).end()
-    attrs = []
-    while k < endpos and (m := _ATTRFIND.match(raw, k)):
-        name, rest, value = m.group(1, 2, 3)
-        if not rest:
-            value = None
-        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
-            value = value[1:-1]
-        attrs.append((name.lower(), unescape(value) if value else value))
-        k = m.end()
-    return attrs, k
-
-
-def _tag(raw: str, i: int, endpos: int, tag: str, self_closing: bool, doc: _Doc) -> int:
-    """Emit the start tag at raw[i:endpos]; return where tokenizing goes on
-    (-1: a script/style element never closes, and html.parser drops the
-    rest).  Script/style raw text is never emitted: the element is in
-    _SKIP_TAGS, so _Doc.data would drop it."""
-    attrs = _attrs(raw, i, endpos)[0] if tag in _ATTR_TAGS else ()
-    if self_closing:
-        doc.startend(tag, attrs)
-        return endpos
-    doc.start(tag, attrs)
-    if tag not in _RAW_TEXT_END:
-        return endpos
-    m = _RAW_TEXT_END[tag].search(raw, endpos)
-    if m is None:
-        return -1
-    doc.end(tag)
-    return m.end()
-
-
 def _markup(raw: str, i: int, doc: _Doc) -> int:
-    """Whatever starts at the '<' raw[i] when _NEXT took no tag there, by
+    """Whatever starts at the '<' raw[i] when it opens no tag, by
     html.parser's rules; returns the index after it."""
-    if raw[i + 1:i + 2].isascii() and raw[i + 1:i + 2].isalpha():
-        k = _starttag(raw, i, doc)
-    elif raw.startswith("</", i):
+    if raw.startswith("</", i):
         k = raw.find(">", i + 1)
         if k >= 0:
-            m = _ENDTAG.match(raw, i) or _TAGFIND.match(raw, i + 2)
+            m = _TAGFIND.match(raw, i + 2)
             if m:  # else `</>` or a bogus comment, both up to that '>'
                 doc.end(m.group(1).lower())
             k += 1
@@ -291,30 +245,62 @@ def _markup(raw: str, i: int, doc: _Doc) -> int:
     else:  # a lone '<' is a chunk of its own
         doc.data("<")
         return i + 1
-    if k < 0:  # unterminated: up to its '>' (else the next '<') is text
-        k = raw.find(">", i + 1) + 1 or raw.find("<", i + 1)
-        k = k if k > 0 else i + 1
-        doc.data(unescape(raw[i:k]))
+    return k if k >= 0 else _unterminated(raw, i, doc)
+
+
+def _unterminated(raw: str, i: int, doc: _Doc) -> int:
+    """The construct at the '<' raw[i] never ends: up to its '>' (else the
+    next '<') is text."""
+    k = raw.find(">", i + 1) + 1 or raw.find("<", i + 1)
+    k = k if k > 0 else i + 1
+    doc.data(unescape(raw[i:k]))
     return k
 
 
-def _starttag(raw: str, i: int, doc: _Doc) -> int:
-    j = _STARTTAG_END.match(raw, i).end()
+def _starttag(raw: str, i: int, j: int, name: str, doc: _Doc) -> int:
+    """Emit the start tag ``name`` at the '<' raw[i], read up to raw[j];
+    return where tokenizing goes on (the end of the input when a
+    script/style element never closes: html.parser drops the rest).
+    Attributes are read only for the tags that use them, and script/style
+    raw text is never emitted: the element is in _SKIP_TAGS, so _Doc.data
+    would drop it."""
     nxt = raw[j:j + 1]
     if nxt == ">":
         endpos = j + 1
     elif raw.startswith("/>", j):
         endpos = j + 2
-    elif not nxt or nxt in _INCOMPLETE:
-        return -1
+    elif not nxt or nxt in _INCOMPLETE:  # cut short
+        return _unterminated(raw, i, doc)
     else:
         endpos = j
-    tail = raw[_attrs(raw, i, endpos)[1]:endpos].strip()
-    if tail not in (">", "/>"):
+    tag, k, attrs = name.lower(), i + 1 + len(name), []
+    if k < j:  # more than the name: read on as html.parser does
+        k, keep = _TAGFIND.match(raw, i + 1).end(), tag in _ATTR_TAGS
+        while k < endpos and (m := _ATTRFIND.match(raw, k)):
+            k = m.end()
+            if keep:
+                name, rest, value = m.group(1, 2, 3)
+                if not rest:
+                    value = None
+                elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+                    value = value[1:-1]
+                attrs.append((name.lower(), unescape(value) if value else value))
+    tail = raw[k:endpos].strip()
+    if tail == "/>":
+        doc.startend(tag, attrs)
+        return endpos
+    if tail != ">":
         doc.data(raw[i:endpos])
         return endpos
-    tag = _TAGFIND.match(raw, i + 1).group(1).lower()
-    return _tag(raw, i, endpos, tag, tail == "/>", doc)
+    doc.start(tag, attrs)
+    close = _RAW_TEXT_END.get(tag)
+    if close is None:
+        return endpos
+    m = close.search(raw, endpos)
+    if m is None:
+        return len(raw)
+    doc.end(tag)
+    return m.end()
 
 
 def _classify(blocks: list[dict]) -> None:

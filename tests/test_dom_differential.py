@@ -108,7 +108,8 @@ def _payloads() -> list[bytes]:
 _TOKENS = [b"<", b"</", b"&", b"<!--", b"-->", b"<!", b"<?", b"'", b'"', b"<script>",
            b"</script", b"</script>", b"<style>", b">", b"/>", b"=", b"<![CDATA[", b"]]>",
            b"<![if", b"<![foo[", b"&amp;", b"&#", b"&#x41", b"<a href=", b"<br/>", b"\x00",
-           b" ", b"\n", b"<p", b"</p", b"<!DOCTYPE", b"</>", b"<a\x0b", b"\xc5\xbf"]
+           b" ", b"\n", b"<p", b"</p", b"<!DOCTYPE", b"</>", b"<a\x0b", b"\xc5\xbf",
+           b"<script src=a.js?v=1>", b"<style media=a=b>", b"</iframe>", b"</svg>"]
 
 
 def _mutant(rng: random.Random, base: bytes) -> bytes:
@@ -175,6 +176,11 @@ def test_unknown_marked_section_is_a_bogus_comment():
     b"<p>x</p><script>if (a</b) {}</script >y",  # raw text, spaced close tag
     b"<p>x<style>p{}</\xc5\xbftyle><p>no</style>tail",  # non-ASCII lookalike close
     b"<p>x<script>never closed <p>gone",
+    # never closed, from a start tag the well-formed-tag pattern rejects:
+    # a later close of another dropped element must not revive the text
+    b'<p>x<script src=a.js?v=1>var s="</iframe>";<p>one two three four five six seven eight',
+    b'<p>x<script src=a.js?v=1>var s="</style>";<p>one two three four five six seven eight',
+    b'<p>x<style media=a=b>p{}</svg><p>one two three four five six seven eight',
     b"<a href=/a/b/>x</a><a href=c/ >y</a><br/><br />",
     b"<p>v<a\tb='1'c=\"2\" d = e>w</a></p>",
     b"<p>x</p  junk><!-- c --><!-- open <p>y",

@@ -107,6 +107,12 @@ class TestPdfPreamble:
         pdf, _ = make_pdf(random.Random("pre:3"), 3)
         r = extract_document(b"junk\r\n" + pdf[:len(pdf) // 2])
         assert (r["kind"], r["status"]) == ("pdf", "error")
+        # cut inside the first object, before any `endobj` (a crawl byte
+        # cap over a large first stream)
+        cut = pdf.index(b"endobj") - 1
+        assert b" obj" in pdf[:cut]
+        r = extract_document(b"junk\r\n" + pdf[:cut])
+        assert (r["kind"], r["status"]) == ("pdf", "error")
 
     def test_deep_magic_not_sniffed(self):
         # the scan window is 1 KiB: %PDF- beyond it stays raw
