@@ -89,16 +89,6 @@ def _unify_pdf_block(b: dict) -> dict:
     }
 
 
-def _unify_dom_block(b: dict) -> dict:
-    return {
-        "block_no": b["block_no"], "tag": b["tag"], "text": b["text"],
-        "char_count": b["char_count"], "word_count": b["word_count"],
-        "x0": None, "y0": None, "x1": None, "y1": None,
-        "block_type": 0 if b["is_content"] else 1,
-        "link_density": b["link_density"], "is_content": b["is_content"],
-    }
-
-
 def _unify_image(img: dict) -> dict:
     return {
         "image_index": img["image_index"],
@@ -167,7 +157,7 @@ def _html_pages(payload: bytes) -> tuple[list, str, dict]:
     # blank lines, so its words are theirs
     words = sum(b["word_count"] for b in r["blocks"] if b["is_content"])
     pages = [_page(1, r["text"], words,
-                   blocks=[_unify_dom_block(b) for b in r["blocks"]],
+                   blocks=r["blocks"],
                    tables=r["tables"], links=r["links"])]
     meta = {"encoding": r["encoding"]}
     # additive crawl-policy keys: absent when the doc declares neither

@@ -15,13 +15,13 @@ cell cleaning (whitespace collapse, null->'' coalesce) stays relational
 
 The tokenizer emits exactly the start-tag / end-tag / data events of
 CPython 3.11's ``html.parser`` (``convert_charrefs=True``, one feed, then
-close), data-chunk boundaries included: ``n_links`` counts chunks inside
-anchors, and a chunk can open a ``_text`` block.  Each step takes a text
-run and the markup at its ``<``, read with ``html.parser``'s own patterns
-and recovery rules.  One deliberate difference: a ``<![`` section with an
-unknown keyword is a bogus comment up to the next ``>`` (the HTML5 rule),
-where ``html.parser`` raised and lost the rest of the page.  Attributes
-are parsed only for the tags whose attributes are read.
+close), data-chunk boundaries included: a chunk can open a ``_text``
+block.  Each step takes a text run and the markup at its ``<``, read with
+``html.parser``'s own patterns and recovery rules.  One deliberate
+difference: a ``<![`` section with an unknown keyword is a bogus comment up
+to the next ``>`` (the HTML5 rule), where ``html.parser`` raised and lost
+the rest of the page.  Attributes are parsed only for the tags whose
+attributes are read.
 
 Deterministic: a pure function of the input bytes.  No wall clock, no I/O.
 """
@@ -79,11 +79,10 @@ _INCOMPLETE = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/"
 
 
 class _Block:
-    __slots__ = ("tag", "in_noise", "parts", "link_chars", "n_links")
+    __slots__ = ("tag", "in_noise", "parts", "link_chars")
 
     def __init__(self, tag: str, in_noise: bool) -> None:
-        self.tag, self.in_noise, self.parts, self.link_chars, self.n_links = \
-            tag, in_noise, [], 0, 0
+        self.tag, self.in_noise, self.parts, self.link_chars = tag, in_noise, [], 0
 
 
 class _Doc:
@@ -196,7 +195,6 @@ class _Doc:
         cur.parts.append(data)
         if self.anchors:
             cur.link_chars += len(data)
-            cur.n_links += 1
 
 
 def _tokenize(raw: str, doc: _Doc) -> None:
@@ -303,16 +301,18 @@ def _starttag(raw: str, i: int, j: int, name: str, doc: _Doc) -> int:
     return m.end()
 
 
-def _classify(blocks: list[dict]) -> None:
-    """Boilerpipe-style two-pass classification; mutates ``is_content``."""
-    for b in blocks:
+def _classify(blocks: list[dict], in_noise: list[bool]) -> None:
+    """Boilerpipe-style two-pass classification; sets ``is_content`` and
+    ``block_type`` (0 content, 1 boilerplate).  ``in_noise[i]`` is whether
+    block ``i`` sits inside a nav/footer/aside/header element."""
+    for b, noise in zip(blocks, in_noise):
         min_words = 1 if b["tag"] in HEADING_TAGS else MIN_CONTENT_WORDS
-        b["is_content"] = not (b["in_noise"] or b["tag"] == "title") and \
+        b["is_content"] = not (noise or b["tag"] == "title") and \
             b["word_count"] >= min_words and b["link_density"] <= MAX_LINK_DENSITY
     # smoothing pass: promote short low-link blocks sandwiched between
     # content (left to right: a promoted block counts for its successor)
-    for prev, b, nxt in zip(blocks, blocks[1:], blocks[2:]):
-        if not (b["is_content"] or b["in_noise"] or b["tag"] == "title") \
+    for prev, b, nxt, noise in zip(blocks, blocks[1:], blocks[2:], in_noise[1:]):
+        if not (b["is_content"] or noise or b["tag"] == "title") \
                 and b["word_count"] and b["link_density"] <= MAX_LINK_DENSITY \
                 and prev["is_content"] and nxt["is_content"]:
             b["is_content"] = True
@@ -323,6 +323,8 @@ def _classify(blocks: list[dict]) -> None:
     for b in blocks[last + 1:]:
         if b["tag"] in HEADING_TAGS:
             b["is_content"] = False
+    for b in blocks:
+        b["block_type"] = 0 if b["is_content"] else 1
 
 
 def parse_html(data: bytes) -> dict:
@@ -339,19 +341,23 @@ def parse_html(data: bytes) -> dict:
 
 
 def _result(doc: _Doc, enc: str) -> dict:
+    """Blocks come out in schema.BLOCK_SCHEMA shape (no bbox in html)."""
     blocks: list[dict] = []
+    in_noise: list[bool] = []
     for blk in doc.blocks:
         text = normalize_text("".join(blk.parts))
         if text:
             blocks.append({
                 "block_no": len(blocks), "tag": blk.tag, "text": text,
                 "char_count": len(text), "word_count": word_count(text),
-                "n_links": blk.n_links,
+                "x0": None, "y0": None, "x1": None, "y1": None,
+                "block_type": 1,
                 "link_density": round(min(1.0, blk.link_chars / len(text)), 6)
                 if blk.link_chars else 0.0,
-                "in_noise": blk.in_noise, "is_content": False,
+                "is_content": False,
             })
-    _classify(blocks)
+            in_noise.append(blk.in_noise)
+    _classify(blocks, in_noise)
     return {
         "title": normalize_text("".join(doc.title_parts)),
         "text": "\n\n".join(b["text"] for b in blocks if b["is_content"]),

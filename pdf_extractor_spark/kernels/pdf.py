@@ -392,7 +392,12 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
     variable-width codes 9→12 bits, 256=ClearTable, 257=EOD, /EarlyChange
     (default 1) widens one code early.  Legacy Acrobat-era PDFs use this
     for content and ToUnicode streams (reference reads them via MuPDF —
-    table_extractor-era fixtures; here it's ~50 lines of spec)."""
+    table_extractor-era fixtures; here it's ~50 lines of spec).
+
+    A missing EOD is accepted only where a writer that omits it would end
+    the stream: after the last whole code, fewer than 8 bits remain and all
+    of them are zero (padding to the byte).  Any other end, such as a code
+    cut short, raises ``PdfError("LZW: truncated stream")``."""
     if early not in (0, 1):
         raise PdfError(f"LZW: bad EarlyChange {early}")
     base = [bytes([c]) for c in range(256)] + [b"", b""]  # 256/257 sentinels
@@ -404,8 +409,10 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
     i, n = 0, len(data)
     while True:
         while nacc < width:
-            if i >= n:
-                return bytes(out)  # data exhausted without EOD: accept (§ note)
+            if i >= n:  # no EOD: accept only zero padding to the byte
+                if nacc < 8 and not acc:
+                    return bytes(out)
+                raise PdfError("LZW: truncated stream")
             acc = (acc << 8) | data[i]
             i += 1
             nacc += 8

@@ -9,6 +9,8 @@ with a single kernel pass per document.
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -21,18 +23,11 @@ __all__ = ["extract_udf", "with_extraction", "extracted_docs_frame"]
 _FIELDS = [f.name for f in EXTRACTION_SCHEMA.fields]
 
 
-@pandas_udf(EXTRACTION_SCHEMA)
-def extract_udf(payload: pd.Series) -> pd.DataFrame:
-    """binary -> full extraction struct (kind/status/title/pages/metadata)."""
-    results = [extract_document(bytes(b) if b is not None else b"") for b in payload]
-    return pd.DataFrame({name: [r[name] for r in results] for name in _FIELDS})
-
-
-def _doc_row(payload: bytes) -> dict:
-    """Doc-level slim result: same kernels, but only scalars cross Arrow.
-    Serializing the full nested tree (thousands of block structs per big doc)
-    costs ~5x the kernel itself; the docs-table path never needs it."""
-    r = extract_document(payload)
+def _doc_row(r: dict) -> dict:
+    """The docs-table columns (schema.DOC_SCHEMA) of one extraction result:
+    the per-doc summary of the reference (extraction_result.py:100-130).
+    Every docs-table path builds its columns here and nowhere else.
+    Metadata is canonical JSON: sorted keys, compact separators."""
     pages = r["pages"]
     return {
         "kind": r["kind"], "status": r["status"], "error": r["error"],
@@ -44,31 +39,36 @@ def _doc_row(payload: bytes) -> dict:
         "total_images": sum(len(p["images"]) for p in pages),
         "total_tables": sum(len(p["tables"]) for p in pages),
         "total_links": sum(len(p["links"]) for p in pages),
-        "metadata": r["metadata"],
+        "metadata_json": json.dumps(r["metadata"], sort_keys=True,
+                                    ensure_ascii=False, separators=(",", ":")),
     }
 
 
-# Names/types of the derived doc-level columns (schema.DOC_SCHEMA).
-_DOC_DERIVED = [(f.name, f.dataType.simpleString()) for f in DOC_SCHEMA.fields]
+@pandas_udf(EXTRACTION_SCHEMA)
+def extract_udf(payload: pd.Series) -> pd.DataFrame:
+    """binary -> the docs-table columns plus the full ``pages`` tree."""
+    rows = []
+    for b in payload:
+        r = extract_document(bytes(b) if b is not None else b"")
+        rows.append({**_doc_row(r), "pages": r["pages"]})
+    return pd.DataFrame({name: [r[name] for r in rows] for name in _FIELDS})
 
 
 def extracted_docs_frame(df, payload_col: str = "html"):
     """Input pages frame -> flat doc-level frame via ONE mapInPandas pass.
 
-    Flat columns, not a struct, and metadata as a deterministic JSON string:
-    measured on this box, the pandas_udf struct return costs ~4x and a
-    MapType column another ~3x over flat Arrow columns — at 100 TB that is
-    the difference between kernel-bound and serialization-bound.  All input
-    columns except the payload and the (empty) input ``text`` pass through.
+    Only the docs-table scalars cross Arrow: serializing the full nested
+    tree (thousands of block structs per big doc) costs ~5x the kernel
+    itself, and a pandas_udf struct return costs ~4x over flat Arrow
+    columns.  All input columns except the payload and the (empty) input
+    ``text`` pass through.
     """
-    import json
-
     passthrough = [
         f for f in df.schema.fields if f.name not in (payload_col, "text")
     ]
     out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in passthrough]
-        + [f"{n} {t}" for n, t in _DOC_DERIVED]
+        [f"{f.name} {f.dataType.simpleString()}"
+         for f in passthrough + DOC_SCHEMA.fields]
         + ["n_bytes long"]
     )
     pass_names = [f.name for f in passthrough]
@@ -76,20 +76,10 @@ def extracted_docs_frame(df, payload_col: str = "html"):
     def run(batches):
         for pdf in batches:
             payloads = [bytes(b) if b is not None else b"" for b in pdf[payload_col]]
-            rows = [_doc_row(b) for b in payloads]
+            rows = [_doc_row(extract_document(b)) for b in payloads]
             out = {n: pdf[n].reset_index(drop=True) for n in pass_names}
-            for name, _t in _DOC_DERIVED:
-                if name == "metadata_json":
-                    # Canonical form: sorted keys + compact separators ==
-                    # Spark to_json(map_from_entries(array_sort(...))) used
-                    # by the has_ext path — both paths byte-equal by test.
-                    out[name] = [
-                        json.dumps(r["metadata"], sort_keys=True,
-                                   ensure_ascii=False, separators=(",", ":"))
-                        for r in rows
-                    ]
-                else:
-                    out[name] = [r[name] for r in rows]
+            for f in DOC_SCHEMA.fields:
+                out[f.name] = [r[f.name] for r in rows]
             out["n_bytes"] = [len(b) for b in payloads]
             yield pd.DataFrame(out)
 

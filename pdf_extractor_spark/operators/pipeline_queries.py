@@ -87,8 +87,7 @@ def q_extract_text(spark: SparkSession, sf: str) -> DataFrame:
     extraction must reproduce, byte-identically, the SQL-stated expectation —
     heading + article body when the body clears MIN_CONTENT_WORDS, else
     empty (heading demoted, kernels/dom.py _classify).  Uses the slim
-    doc-level kernel (flat mapInPandas, no nested structs over Arrow); its
-    text is proven equal to the full-struct doc_text_expr path in tests."""
+    doc-level kernel (flat mapInPandas, no nested structs over Arrow)."""
     from ..operators.extract import extracted_docs_frame
 
     pages = pages_from_documents(spark, sf)

@@ -12,12 +12,9 @@ Dataflow::
          in operators/relational
       -> ONE kernel pass: docs-only runs use the slim mapInPandas
          (operators/extract.extracted_docs_frame); runs that also write the
-         pages table persist the struct pass (extract_udf) for both sinks
-      -> pages-table runs assemble docs WITHOUT a shuffle: ordered text
-         reassembly (OP-43b) runs as array_sort + transform + concat_ws
-         higher-order functions over the pages array already resident in
-         the row — the relational groupBy formulation exists as
-         operators.relational.ordered_concat and is proven equal in tests
+         pages table persist the struct pass (extract_udf) for both sinks,
+         and the docs table selects the doc columns the kernel already built
+         in that pass (operators/extract._doc_row builds them for both)
       -> per-bucket parquet write + checkpoint manifest row with lineage +
          doc/byte counters (Observation API)                      (§4.3.3)
 
@@ -39,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import with_extraction
+from ..schema import DOC_SCHEMA
 
 __all__ = [
     "doc_text_expr",
@@ -62,7 +60,9 @@ def doc_text_expr(pages: Column, kind: Column) -> Column:
     ``array_sort`` orders the pages struct array by its leading field
     ``page_number`` (explicit sort key — never row order), then PDFs get the
     reference's ``=== Page N ===`` banners; single-page kinds pass through.
-    Must stay byte-equal to kernels.dispatch.assemble_doc_text.
+    Must stay byte-equal to kernels.dispatch.assemble_doc_text.  Only
+    ``cli --pages`` uses it: that path reassembles a page *subset*, which
+    the kernel's whole-document text cannot give.
     """
     sorted_pages = F.array_sort(pages)
     banner = F.transform(
@@ -72,10 +72,6 @@ def doc_text_expr(pages: Column, kind: Column) -> Column:
     return F.when(kind == "pdf", F.concat_ws("\n\n", banner)).otherwise(
         F.coalesce(F.element_at(sorted_pages, 1)["text"], F.lit(""))
     )
-
-
-def _sum_field(pages: Column, fn) -> Column:
-    return F.aggregate(pages, F.lit(0), lambda acc, p: acc + F.coalesce(fn(p), F.lit(0)))
 
 
 def route_oversized(df: DataFrame, parts: int,
@@ -100,48 +96,21 @@ def route_oversized(df: DataFrame, parts: int,
 def extracted_docs(df: DataFrame, has_ext: bool = False) -> DataFrame:
     """Document-level output table: one row per url.
 
-    Standalone (has_ext=False): uses the slim doc-level kernel
-    (extract_doc_udf) — no nested structs cross the Arrow boundary, ~5x
-    cheaper on block-heavy documents.  Shared-pass mode (has_ext=True, used
-    when the pages table is written from the same kernel pass): totals come
-    from higher-order aggregates over the pages array — the per-doc summary
-    semantics of the reference (extraction_result.py:100-130) without any
-    shuffle.  Both paths are proven byte/value-equal in tests."""
+    Standalone (has_ext=False): the slim doc-level pass
+    (operators/extract.extracted_docs_frame), so no nested structs cross
+    the Arrow boundary.  Shared-pass mode (has_ext=True, used when the pages
+    table is written from the same kernel pass): a flat select of the doc
+    columns the struct pass already carries.  Both get their columns from
+    operators/extract._doc_row, in the same order."""
     if not has_ext:
         from ..operators.extract import extracted_docs_frame
 
         return extracted_docs_frame(df)
-    ext = df  # expects columns: url, warc_ts, lang, ext, n_bytes
-    pages = F.col("ext.pages")
-    return ext.select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("ext.kind").alias("kind"),
-        F.col("ext.status").alias("status"),
-        F.col("ext.error").alias("error"),
-        F.col("ext.title").alias("title"),
-        F.col("ext.n_pages").alias("n_pages"),
-        doc_text_expr(pages, F.col("ext.kind")).alias("text"),
-        _sum_field(pages, lambda p: p["char_count"]).cast("long").alias("total_chars"),
-        _sum_field(pages, lambda p: p["word_count"]).cast("long").alias("total_words"),
-        _sum_field(pages, lambda p: F.size(p["blocks"])).cast("long")
-        .alias("total_text_blocks"),
-        _sum_field(pages, lambda p: F.size(p["images"])).cast("long")
-        .alias("total_images"),
-        _sum_field(pages, lambda p: F.size(p["tables"])).cast("long")
-        .alias("total_tables"),
-        _sum_field(pages, lambda p: F.size(p["links"])).cast("long")
-        .alias("total_links"),
-        # Canonical metadata JSON: entries sorted by key, compact separators —
-        # byte-equal to the slim path's json.dumps(sort_keys=True,
-        # separators=(",", ":")) regardless of map insertion order.  Column
-        # order (metadata_json before n_bytes) also matches the slim path so
-        # the docs table bytes don't depend on write_pages_table mode.
-        F.to_json(
-            F.map_from_entries(F.array_sort(F.map_entries(F.col("ext.metadata"))))
-        ).alias("metadata_json"),
-        F.col("n_bytes"),
+    # expects columns: url, warc_ts, lang, ext, n_bytes
+    return df.select(
+        "url", "warc_ts", "lang",
+        *[F.col(f"ext.{f.name}").alias(f.name) for f in DOC_SCHEMA.fields],
+        "n_bytes",
     )
 
 

@@ -2,8 +2,8 @@
 
 The reference's dataclass tree (/root/reference/pdf_extractor/models/
 extraction_result.py:86-141) mapped to columnar Spark types: nested lists ->
-ArrayType(StructType), metadata dict -> MapType, image payload -> BinaryType
-column (no side files in a distributed engine).
+ArrayType(StructType), metadata dict -> canonical JSON string, image payload
+-> BinaryType column (no side files in a distributed engine).
 """
 
 from __future__ import annotations
@@ -69,25 +69,13 @@ PAGE_SCHEMA = T.StructType([
     T.StructField("links", T.ArrayType(T.StringType()), True),
 ])
 
-# ExtractionResult analogue (extraction_result.py:108-141); timestamps are
-# derived relationally (OP-21), never inside the kernel.
-EXTRACTION_SCHEMA = T.StructType([
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("status", T.StringType(), False),
-    T.StructField("error", T.StringType(), True),
-    T.StructField("title", T.StringType(), True),
-    T.StructField("n_pages", T.IntegerType(), False),
-    T.StructField("pages", T.ArrayType(PAGE_SCHEMA), True),
-    T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-])
-
-# Doc-level derived columns (per-concern kernel split, SURVEY.md §4.1):
-# Catalyst cannot prune fields INSIDE a UDF result, so the docs-table path
-# gets its own slim kernel output — no block structs, no image payloads ever
-# cross the Arrow boundary.  Emitted as FLAT columns via mapInPandas (struct
-# returns and MapType columns each cost severalfold in Arrow conversion);
-# ``text`` is the assembled doc text (dispatch.assemble_doc_text — the
-# goldens oracle); metadata rides as a deterministic JSON string.
+# The docs table's derived columns, one row per document: the per-doc
+# summary of the reference's ExtractionResult (extraction_result.py:100-130).
+# ``text`` is the assembled doc text (dispatch.assemble_doc_text, the goldens
+# oracle); metadata rides as a deterministic JSON string, because struct
+# returns and MapType columns each cost severalfold in Arrow conversion.
+# operators/extract._doc_row builds these columns and nothing else does;
+# timestamps are derived relationally (OP-21), never inside the kernel.
 DOC_SCHEMA = T.StructType([
     T.StructField("kind", T.StringType(), False),
     T.StructField("status", T.StringType(), False),
@@ -103,3 +91,9 @@ DOC_SCHEMA = T.StructType([
     T.StructField("total_links", T.LongType(), True),
     T.StructField("metadata_json", T.StringType(), True),
 ])
+
+# ExtractionResult analogue (extraction_result.py:108-141): the docs-table
+# columns plus the full page tree, for runs that also write the pages table.
+EXTRACTION_SCHEMA = T.StructType(
+    DOC_SCHEMA.fields + [T.StructField("pages", T.ArrayType(PAGE_SCHEMA), True)]
+)

@@ -453,6 +453,68 @@ def test_lzw_hostile_inputs_error_route():
         _lzw_decode(b"\x00", early=2)
 
 
+def _lzw_code_ends(stream: bytes, early: int) -> tuple[str, list[int]]:
+    """The stream's bits and the bit offset where each code before EOD
+    ends, walking the code widths of PDF 32000-1 §7.4.4 (9→12 bits,
+    ClearTable resets, one table entry per code after the first)."""
+    bits = "".join(f"{b:08b}" for b in stream)
+    ends, pos, width, size, first = [], 0, 9, 258, True
+    while (code := int(bits[pos:pos + width], 2)) != 257:
+        pos += width
+        ends.append(pos)
+        if code == 256:
+            width, size, first = 9, 258, True
+            continue
+        if not first:
+            size = min(size + 1, 4096)
+        first = False
+        if width < 12 and size >= (1 << width) - early:
+            width += 1
+    return bits, ends
+
+
+def _lzw_cases() -> list[bytes]:
+    rng = random.Random(10)
+    text = bytes(rng.choices(b"abcdefgh BT ET Tj()0123", k=3000))
+    return [text[:n] for n in range(1, 3001, 7)] + [rng.randbytes(20000)]
+
+
+def test_lzw_without_eod_decodes_equal():
+    """A writer that omits EOD ends the stream on the last code, zero-padded
+    to the byte; such streams decode as if EOD were there."""
+    from pdf_extractor_spark.kernels.pdf import _lzw_decode
+    from pdf_extractor_spark.sources.synth import _lzw_encode
+
+    for early in (1, 0):
+        for data in _lzw_cases():
+            bits, ends = _lzw_code_ends(_lzw_encode(data, early), early)
+            kept = bits[:ends[-1]] + "0" * (-ends[-1] % 8)
+            stripped = int(kept, 2).to_bytes(len(kept) // 8, "big")
+            assert _lzw_decode(stripped, early) == data
+
+
+def test_lzw_cut_mid_code_error_routes():
+    """A stream cut before EOD decodes only when the bits after its last
+    whole code are zero padding (< 8 bits); otherwise it is truncated."""
+    from pdf_extractor_spark.kernels.pdf import PdfError, _lzw_decode
+    from pdf_extractor_spark.sources.synth import _lzw_encode
+
+    raised = 0
+    for early in (1, 0):
+        for data in _lzw_cases()[::100]:
+            stream = _lzw_encode(data, early)
+            bits, ends = _lzw_code_ends(stream, early)
+            for n in range(1, ends[-1] // 8 + 1):
+                rest = bits[max(e for e in [0, *ends] if e <= 8 * n):8 * n]
+                if "1" in rest or len(rest) >= 8:
+                    with pytest.raises(PdfError, match="LZW: truncated stream"):
+                        _lzw_decode(stream[:n], early)
+                    raised += 1
+                else:
+                    assert data.startswith(_lzw_decode(stream[:n], early))
+    assert raised > 1000
+
+
 def test_lzw_streams_parse_in_modern_dialect():
     """Documents whose modern serialization drew the LZW filter (with and
     without /EarlyChange 0) must parse byte-identical to their classic

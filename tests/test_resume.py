@@ -67,3 +67,27 @@ def test_manifest_schema(spark, fixture_df, tmp_path):
         assert set(e) == {"run_id", "input_snapshot", "bucket", "n_docs",
                           "n_bytes", "wall_s", "status"}
         assert e["input_snapshot"] == "snap-1"
+
+
+def test_pages_mode_docs_equal_docs_only(spark, fixture_df, tmp_path):
+    """``write_pages_table`` (the default) must not change the docs table:
+    same columns in the same order and the same rows as a docs-only run.
+    The pages table holds exactly the rows of ``extracted_pages``."""
+    from collections import Counter
+
+    from pdf_extractor_spark.plans.pipeline import extracted_pages
+
+    with_pages, docs_only = str(tmp_path / "pages"), str(tmp_path / "docs_only")
+    run_extraction(spark, fixture_df, with_pages, n_buckets=2, resume=False)
+    run_extraction(spark, fixture_df, docs_only, n_buckets=2, resume=False,
+                   write_pages_table=False)
+    a = spark.read.parquet(f"{with_pages}/docs")
+    b = spark.read.parquet(f"{docs_only}/docs")
+    assert a.columns == b.columns
+    assert Counter(map(tuple, a.collect())) == Counter(map(tuple, b.collect()))
+
+    got = spark.read.parquet(f"{with_pages}/pages").drop("bucket")
+    want = extracted_pages(fixture_df)
+    assert got.columns == want.columns
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
