@@ -2057,13 +2057,6 @@ def _group_lines(runs: list[dict]) -> list[list[dict]]:
     return lines
 
 
-def _assemble_text(runs: list[dict]) -> tuple[str, list[dict]]:
-    """Text + block assembly over the grouped lines (OP-48/OP-39/OP-49)."""
-    if not runs:
-        return "", []
-    return _assemble_from_lines(_group_lines(runs))
-
-
 def _assemble_from_lines(lines: list[list[dict]]) -> tuple[str, list[dict]]:
     blocks: list[dict] = []
     out_lines: list[str] = []

@@ -1,26 +1,34 @@
-"""Vectorized extraction UDF (SURVEY.md OP-59/60/61/64/65 as one Arrow pass).
+"""Vectorized extraction passes (SURVEY.md OP-59/60/61/64/65 as one Arrow pass).
 
-One scalar pandas UDF over the binary payload column: each Arrow batch is
-processed in a single Python round-trip (no per-row Python at the Spark
-level, per BASELINE.json input_hint).  Replaces the reference's triple
-document parse (/root/reference/pdf_extractor/core/extractor.py:116,149,201)
-with a single kernel pass per document.
+Both passes trade pyarrow data with the JVM: each Arrow batch is processed in
+a single Python round trip, and no pandas frame is built on either side of
+the kernel (no per-row Python at the Spark level, per BASELINE.json
+input_hint).  Replaces the reference's triple document parse
+(/root/reference/pdf_extractor/core/extractor.py:116,149,201) with a single
+kernel pass per document.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from ..kernels.dispatch import assemble_doc_text, extract_document
 from ..schema import DOC_SCHEMA, EXTRACTION_SCHEMA
 
 __all__ = ["extract_udf", "with_extraction", "extracted_docs_frame"]
 
-_FIELDS = [f.name for f in EXTRACTION_SCHEMA.fields]
+_DOC_ARROW = to_arrow_schema(DOC_SCHEMA)
+_EXTRACTION_ARROW = to_arrow_type(EXTRACTION_SCHEMA)
+
+
+def _payloads(col: pa.Array) -> list[bytes]:
+    """A binary Arrow column as bytes; a null payload extracts as empty."""
+    return [b if b is not None else b"" for b in col.to_pylist()]
 
 
 def _doc_row(r: dict) -> dict:
@@ -44,24 +52,23 @@ def _doc_row(r: dict) -> dict:
     }
 
 
-@pandas_udf(EXTRACTION_SCHEMA)
-def extract_udf(payload: pd.Series) -> pd.DataFrame:
+@arrow_udf(EXTRACTION_SCHEMA)
+def extract_udf(payload: pa.Array) -> pa.Array:
     """binary -> the docs-table columns plus the full ``pages`` tree."""
     rows = []
-    for b in payload:
-        r = extract_document(bytes(b) if b is not None else b"")
+    for b in _payloads(payload):
+        r = extract_document(b)
         rows.append({**_doc_row(r), "pages": r["pages"]})
-    return pd.DataFrame({name: [r[name] for r in rows] for name in _FIELDS})
+    return pa.array(rows, type=_EXTRACTION_ARROW)
 
 
 def extracted_docs_frame(df, payload_col: str = "html"):
-    """Input pages frame -> flat doc-level frame via ONE mapInPandas pass.
+    """Input pages frame -> flat doc-level frame via ONE mapInArrow pass.
 
     Only the docs-table scalars cross Arrow: serializing the full nested
     tree (thousands of block structs per big doc) costs ~5x the kernel
-    itself, and a pandas_udf struct return costs ~4x over flat Arrow
-    columns.  All input columns except the payload and the (empty) input
-    ``text`` pass through.
+    itself.  All input columns except the payload and the (empty) input
+    ``text`` pass through, as the very Arrow arrays they arrived as.
     """
     passthrough = [
         f for f in df.schema.fields if f.name not in (payload_col, "text")
@@ -72,18 +79,19 @@ def extracted_docs_frame(df, payload_col: str = "html"):
         + ["n_bytes long"]
     )
     pass_names = [f.name for f in passthrough]
+    out_names = pass_names + _DOC_ARROW.names + ["n_bytes"]
 
     def run(batches):
-        for pdf in batches:
-            payloads = [bytes(b) if b is not None else b"" for b in pdf[payload_col]]
+        for batch in batches:
+            payloads = _payloads(batch.column(payload_col))
             rows = [_doc_row(extract_document(b)) for b in payloads]
-            out = {n: pdf[n].reset_index(drop=True) for n in pass_names}
-            for f in DOC_SCHEMA.fields:
-                out[f.name] = [r[f.name] for r in rows]
-            out["n_bytes"] = [len(b) for b in payloads]
-            yield pd.DataFrame(out)
+            cols = [batch.column(n) for n in pass_names]
+            cols += [pa.array([r[f.name] for r in rows], type=f.type)
+                     for f in _DOC_ARROW]
+            cols.append(pa.array([len(b) for b in payloads], type=pa.int64()))
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInArrow(run, schema=out_schema)
 
 
 def with_extraction(df, payload_col: str = "html", out_col: str = "ext"):

@@ -87,7 +87,7 @@ def q_extract_text(spark: SparkSession, sf: str) -> DataFrame:
     extraction must reproduce, byte-identically, the SQL-stated expectation —
     heading + article body when the body clears MIN_CONTENT_WORDS, else
     empty (heading demoted, kernels/dom.py _classify).  Uses the slim
-    doc-level kernel (flat mapInPandas, no nested structs over Arrow)."""
+    doc-level kernel (flat mapInArrow, no nested structs over Arrow)."""
     from ..operators.extract import extracted_docs_frame
 
     pages = pages_from_documents(spark, sf)

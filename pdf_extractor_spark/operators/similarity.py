@@ -812,14 +812,6 @@ _EMBED_DIMS = 64  # hashing-trick feature width (a real run uses 2^18+; the
 _HEX = "0123456789abcdef"
 
 
-def _bucket_spark(w: str = "w") -> str:
-    h = f"md5(cast({w} as binary))"
-    return (
-        f"((locate(substring({h}, 31, 1), '{_HEX}') - 1) * 16"
-        f" + locate(substring({h}, 32, 1), '{_HEX}') - 1) % {_EMBED_DIMS}"
-    )
-
-
 def _bucket_duck(w: str = "w") -> str:
     h = f"md5({w})"
     return (

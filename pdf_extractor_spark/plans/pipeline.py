@@ -10,7 +10,7 @@ Dataflow::
          partition and an Arrow batch never holds many multi-MB payloads
          (§4.3.2); host-level value skew is handled by salted aggregation
          in operators/relational
-      -> ONE kernel pass: docs-only runs use the slim mapInPandas
+      -> ONE kernel pass: docs-only runs use the slim mapInArrow
          (operators/extract.extracted_docs_frame); runs that also write the
          pages table persist the struct pass (extract_udf) for both sinks,
          and the docs table selects the doc columns the kernel already built

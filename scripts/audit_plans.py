@@ -175,7 +175,8 @@ def main() -> None:
         plan = buf.getvalue()
         n_exch = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
         has_bhj = "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-        has_arrow = "ArrowEvalPython" in plan or "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
+        has_arrow = ("ArrowEvalPython" in plan or "MapInPandas" in plan
+                     or "MapInArrow" in plan or "FlatMapGroupsInPandas" in plan)
         pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         checks = []
         ok = True

@@ -125,6 +125,80 @@ def test_slim_equals_shared_pass(spark, fixture_df):
     assert a == b
 
 
+def _project(value, dtype):
+    """A kernel value cut to its Spark type's shape, as collect() returns it."""
+    from pyspark.sql import types as T
+
+    if value is None:
+        return None
+    if isinstance(dtype, T.StructType):
+        return {f.name: _project(value.get(f.name), f.dataType) for f in dtype.fields}
+    if isinstance(dtype, T.ArrayType):
+        return [_project(v, dtype.elementType) for v in value]
+    return value
+
+
+def test_arrow_boundary_across_batch_edges(spark):
+    """Both kernel passes trade Arrow batches with the JVM.  With three rows
+    per batch, a null and an empty payload and an extra int column, every
+    docs row must equal the driver-side _doc_row of its own payload and keep
+    its own pass-through columns, and every doc's pages must equal its
+    driver-side tree."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from pdf_extractor_spark.kernels.dispatch import extract_document
+    from pdf_extractor_spark.operators.extract import _doc_row, with_extraction
+    from pdf_extractor_spark.schema import DOC_SCHEMA, PAGE_SCHEMA
+
+    ts = dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc)
+    rows = fixture_rows() + [
+        {"url": "https://edge.example.net/t/null-payload", "warc_ts": ts,
+         "html": None, "text": "", "lang": "nl"},
+        {"url": "https://edge.example.net/t/empty-payload", "warc_ts": None,
+         "html": b"", "text": "", "lang": None},
+    ]
+    schema = T.StructType(PAGES_INPUT_SCHEMA.fields + [T.StructField("seq", T.IntegerType())])
+    df = spark.createDataFrame(
+        [tuple(r[f] for f in PAGES_INPUT_SCHEMA.names) + (i,) for i, r in enumerate(rows)],
+        schema,
+    ).repartition(4)
+    passthrough = ["url", "warc_ts", "lang", "seq"]
+    inputs = {r["seq"]: r for r in df.select(*passthrough).collect()}
+    results = [extract_document(r["html"] or b"") for r in rows]
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        docs = extracted_docs(df).collect()
+        pages = extracted_pages(with_extraction(df)).collect()
+    finally:
+        spark.conf.set(key, old)
+
+    assert sorted(r["seq"] for r in docs) == list(range(len(rows)))
+    for got in docs:
+        i = got["seq"]
+        assert tuple(got[c] for c in passthrough) == tuple(inputs[i]), i
+        want = _doc_row(results[i])
+        assert {f.name: got[f.name] for f in DOC_SCHEMA.fields} == want, rows[i]["url"]
+        assert got["n_bytes"] == len(rows[i]["html"] or b"")
+
+    page_cols = [f.name for f in PAGE_SCHEMA.fields]
+    got_pages: dict[str, list] = {}
+    for p in pages:
+        got_pages.setdefault(p["url"], []).append(p)
+    assert set(got_pages) == {r["url"] for r in rows}
+    for row, result in zip(rows, results):
+        got = sorted(got_pages[row["url"]], key=lambda p: p["page_number"] or 0)
+        assert all(p["kind"] == result["kind"] for p in got), row["url"]
+        want = [_project(p, PAGE_SCHEMA) for p in result["pages"]] or [
+            dict.fromkeys(page_cols)]
+        got = [p.asDict(recursive=True) for p in got]
+        assert [{c: p[c] for c in page_cols} for p in got] == want, row["url"]
+
+
 def test_corrupt_payloads_surface_as_error_rows(spark):
     """Invalid/corrupt payloads must become status='error' side-channel rows
     (OP-32 mapping), never task failures — end-to-end through the slim path."""
