@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.extract import with_extraction
 from .plans.pipeline import (
+    docs_json_rows,
     extracted_docs,
     extracted_images,
     extracted_pages,
@@ -43,12 +45,10 @@ __all__ = [
 
 def extract(df: DataFrame, pages: list[int] | None = None) -> DataFrame:
     """Full extraction -> page-level long table.  ``pages`` reproduces the
-    reference's 1-indexed page-subset parameter (core/extractor.py:119-120)
-    as a relational predicate (OP-03) that Catalyst pushes down."""
-    out = extracted_pages(df)
-    if pages:
-        out = out.filter(F.col("page_number").isin(pages))
-    return out
+    reference's 1-indexed page-subset parameter (core/extractor.py:119-120,
+    OP-03): the kernel pass keeps only those pages, and a document that has
+    none of them yields no row."""
+    return extracted_pages(with_extraction(df, pages=pages), has_ext=True)
 
 
 def extract_text_only(df: DataFrame) -> DataFrame:
@@ -100,8 +100,4 @@ def to_json_rows(df: DataFrame) -> DataFrame:
     """JSON document sink shape (OP-07; extraction_result.py:133-140):
     one JSON string per document, UTF-8, non-ASCII preserved — write with
     ``df.write.text`` for the reference's file-per-doc analogue."""
-    docs = extracted_docs(df)
-    payload = F.to_json(
-        F.struct(*[c for c in docs.columns if c != "metadata_json"])
-    )
-    return docs.select("url", payload.alias("json"))
+    return docs_json_rows(extracted_docs(df))

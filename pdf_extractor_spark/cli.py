@@ -18,8 +18,10 @@ Differences from the reference CLI, all deliberate:
     for every value — the reference crashes on it (main.py:135 passes
     ``image_format`` to a constructor that does not take it); we fix rather
     than reproduce the bug;
-  * ``--pages`` filters relationally (predicate pushdown) instead of
-    re-parsing a page subset.
+  * every artifact (docs, JSON, images, tables, the printed summary) is
+    read from ONE persisted kernel pass per document instead of a parse per
+    concern; ``--pages`` is applied inside that pass, so each artifact holds
+    only the requested pages and the docs table describes them alone.
 """
 
 from __future__ import annotations
@@ -129,48 +131,30 @@ def main(argv: list[str] | None = None,
 
     out = Path(args.output_dir)
     out.mkdir(parents=True, exist_ok=True)
-    # Every written artifact honors --pages (reference semantics: the result
-    # contains ONLY the requested pages — core/extractor.py:119-120).  The
-    # page-filtered doc table is reassembled relationally from the filtered
-    # pages via the zero-shuffle doc_text_expr; without --pages the slim
-    # kernel path writes the full doc table directly.
-    from .plans.pipeline import doc_text_expr, extracted_docs, write_tables_csv
+    from .plans.pipeline import (
+        docs_json_rows,
+        extracted_docs,
+        extracted_images,
+        extracted_pages,
+        extracted_tables,
+        persisted_extraction,
+        write_tables_csv,
+    )
 
-    pages_df = api.extract(df, pages=pages)
-    if pages:
-        docs = (
-            pages_df.groupBy("url", "kind")
-            .agg(
-                F.count(F.lit(1)).alias("n_pages"),
-                F.collect_list(F.struct("page_number", "text")).alias("_pl"),
-                F.sum("char_count").cast("long").alias("total_chars"),
-                F.sum("word_count").cast("long").alias("total_words"),
-            )
-            .select(
-                "url", "kind", "n_pages",
-                doc_text_expr(F.col("_pl"), F.col("kind")).alias("text"),
-                "total_chars", "total_words",
-            )
-        )
-    else:
-        docs = extracted_docs(df)
+    # Every written artifact honors --pages (reference semantics: the result
+    # contains ONLY the requested pages — core/extractor.py:119-120), because
+    # the kernel pass they all read keeps only those pages.
+    ext = persisted_extraction(df, pages=pages)
+    docs = extracted_docs(ext, has_ext=True)
     if args.no_text:
         docs = docs.drop("text")
     docs.write.mode("overwrite").parquet(str(out / "docs"))
     if not args.no_json:
-        if pages:
-            json_rows = docs.select(
-                "url", F.to_json(F.struct(*docs.columns)).alias("json")
-            )
-        else:
-            json_rows = api.to_json_rows(df)
-        json_rows.select("json").write.mode("overwrite").text(str(out / "json"))
+        docs_json_rows(docs).select("json").write.mode("overwrite").text(
+            str(out / "json"))
     if not args.no_images:
-        imgs = api.extract_images_only(
-            df, min_width=args.min_image_size, min_height=args.min_image_size
-        )
-        if pages:
-            imgs = imgs.filter(F.col("page_number").isin(pages))
+        imgs = extracted_images(ext, has_ext=True, min_width=args.min_image_size,
+                                min_height=args.min_image_size)
         if args.image_format:  # extension override, never a crash
             # one whole-string regexp: a name with no extension still gets a
             # dotted suffix instead of 'name42webp'.  Anchored ^...$ so the
@@ -185,17 +169,15 @@ def main(argv: list[str] | None = None,
             )
         imgs.write.mode("overwrite").parquet(str(out / "images"))
     if not args.no_tables:
-        tables = api.extract_tables_only(df)
-        if pages:
-            tables = tables.filter(F.col("page_number").isin(pages))
-        write_tables_csv(tables, str(out / "tables"))
+        write_tables_csv(extracted_tables(ext, has_ext=True), str(out / "tables"))
 
-    summary = pages_df.agg(
+    summary = extracted_pages(ext, has_ext=True).agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.sum(F.size("blocks")).alias("blocks"),
         F.sum(F.size("images")).alias("images"),
         F.sum(F.size("tables")).alias("tables"),
     ).collect()[0]
+    ext.unpersist()
     n_docs = df.count()
     print("\n" + "=" * 50)
     print("EXTRACTION COMPLETE")

@@ -243,10 +243,11 @@ def assemble_doc_text(result: dict) -> str:
     """Ordered text reassembly (OP-43b / OP-09).
 
     PDFs: pages joined in page order with ``=== Page N ===`` banners
-    (reference combined-text sink, /root/reference/pdf_extractor/extractors/
+    (reference combined-text sink, pdf_extractor/extractors/
     ocr_extractor.py:293-298).  Single-page kinds (html/raw): the page text
-    as-is.  The Spark pipeline reproduces this relationally with
-    sort-keyed collect_list + concat_ws; this function is the golden oracle.
+    as-is.  The only text assembly: every docs table, a ``--pages`` subset
+    included, gets its text from here (operators/extract._doc_row), and the
+    goldens are generated with it.
     """
     pages = sorted(result["pages"], key=lambda p: p["page_number"])
     if result["kind"] == "pdf":

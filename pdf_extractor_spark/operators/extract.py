@@ -20,7 +20,7 @@ from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from ..kernels.dispatch import assemble_doc_text, extract_document
 from ..schema import DOC_SCHEMA, EXTRACTION_SCHEMA
 
-__all__ = ["extract_udf", "with_extraction", "extracted_docs_frame"]
+__all__ = ["with_extraction", "extracted_docs_frame"]
 
 _DOC_ARROW = to_arrow_schema(DOC_SCHEMA)
 _EXTRACTION_ARROW = to_arrow_type(EXTRACTION_SCHEMA)
@@ -39,7 +39,7 @@ def _doc_row(r: dict) -> dict:
     pages = r["pages"]
     return {
         "kind": r["kind"], "status": r["status"], "error": r["error"],
-        "title": r["title"], "n_pages": r["n_pages"],
+        "title": r["title"], "n_pages": len(pages),
         "text": assemble_doc_text(r),
         "total_chars": sum(p["char_count"] for p in pages),
         "total_words": sum(p["word_count"] for p in pages),
@@ -50,16 +50,6 @@ def _doc_row(r: dict) -> dict:
         "metadata_json": json.dumps(r["metadata"], sort_keys=True,
                                     ensure_ascii=False, separators=(",", ":")),
     }
-
-
-@arrow_udf(EXTRACTION_SCHEMA)
-def extract_udf(payload: pa.Array) -> pa.Array:
-    """binary -> the docs-table columns plus the full ``pages`` tree."""
-    rows = []
-    for b in _payloads(payload):
-        r = extract_document(b)
-        rows.append({**_doc_row(r), "pages": r["pages"]})
-    return pa.array(rows, type=_EXTRACTION_ARROW)
 
 
 def extracted_docs_frame(df, payload_col: str = "html"):
@@ -94,7 +84,36 @@ def extracted_docs_frame(df, payload_col: str = "html"):
     return df.mapInArrow(run, schema=out_schema)
 
 
-def with_extraction(df, payload_col: str = "html", out_col: str = "ext"):
-    """Attach the full extraction struct column; callers select/prune fields
-    so only needed data crosses later shuffles."""
-    return df.withColumn(out_col, extract_udf(F.col(payload_col)))
+def with_extraction(df, payload_col: str = "html", out_col: str = "ext",
+                    pages: list[int] | None = None):
+    """Attach the full extraction struct column: the docs-table columns plus
+    the ``pages`` tree.  Callers select/prune fields so only needed data
+    crosses later shuffles.
+
+    ``pages`` (1-indexed, reference core/extractor.py:119-120) keeps only
+    those pages of each document before ``_doc_row`` builds its columns, so
+    they describe the kept pages alone; a document that keeps none is
+    dropped."""
+    keep = set(pages) if pages else None
+
+    @arrow_udf(EXTRACTION_SCHEMA)
+    def extract(payload: pa.Array) -> pa.Array:
+        rows = []
+        for b in _payloads(payload):
+            r = extract_document(b)
+            if keep is not None:
+                r["pages"] = [p for p in r["pages"] if p["page_number"] in keep]
+                if not r["pages"]:
+                    rows.append(None)  # no page kept: filtered out below
+                    continue
+            rows.append({**_doc_row(r), "pages": r["pages"]})
+        return pa.array(rows, type=_EXTRACTION_ARROW)
+
+    if keep is None:
+        return df.withColumn(out_col, extract(F.col(payload_col)))
+    # Nondeterministic only so that the optimizer cannot push the filter
+    # below the projection: that would copy the kernel call into the filter
+    # and run every document twice.
+    extract = extract.asNondeterministic()
+    return df.withColumn(out_col, extract(F.col(payload_col))).filter(
+        F.col(out_col).isNotNull())

@@ -12,9 +12,11 @@ Dataflow::
          in operators/relational
       -> ONE kernel pass: docs-only runs use the slim mapInArrow
          (operators/extract.extracted_docs_frame); runs that also write the
-         pages table persist the struct pass (extract_udf) for both sinks,
-         and the docs table selects the doc columns the kernel already built
-         in that pass (operators/extract._doc_row builds them for both)
+         pages table, and every cli run, use persisted_extraction: the
+         struct pass (operators/extract.with_extraction, page subset applied
+         in the kernel) persisted once and read by every sink.  The docs
+         table selects the doc columns the kernel already built in that
+         pass (operators/extract._doc_row builds them for both)
       -> per-bucket parquet write + checkpoint manifest row with lineage +
          doc/byte counters (Observation API)                      (§4.3.3)
 
@@ -32,46 +34,26 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import with_extraction
 from ..schema import DOC_SCHEMA
 
 __all__ = [
-    "doc_text_expr",
     "extracted_docs",
     "extracted_pages",
     "extracted_images",
     "extracted_tables",
+    "docs_json_rows",
     "write_tables_csv",
     "route_oversized",
+    "persisted_extraction",
     "run_extraction",
     "read_manifest",
 ]
 
-PAGE_BANNER_FMT = "=== Page %d ===\n%s"  # reference ocr_extractor.py:293-298
 OVERSIZE_THRESHOLD = 256 * 1024  # bytes; docs above this are routed separately
-
-
-def doc_text_expr(pages: Column, kind: Column) -> Column:
-    """Ordered text reassembly (OP-43b) with ZERO shuffle.
-
-    ``array_sort`` orders the pages struct array by its leading field
-    ``page_number`` (explicit sort key — never row order), then PDFs get the
-    reference's ``=== Page N ===`` banners; single-page kinds pass through.
-    Must stay byte-equal to kernels.dispatch.assemble_doc_text.  Only
-    ``cli --pages`` uses it: that path reassembles a page *subset*, which
-    the kernel's whole-document text cannot give.
-    """
-    sorted_pages = F.array_sort(pages)
-    banner = F.transform(
-        sorted_pages,
-        lambda p: F.format_string(PAGE_BANNER_FMT, p["page_number"], p["text"]),
-    )
-    return F.when(kind == "pdf", F.concat_ws("\n\n", banner)).otherwise(
-        F.coalesce(F.element_at(sorted_pages, 1)["text"], F.lit(""))
-    )
 
 
 def route_oversized(df: DataFrame, parts: int,
@@ -93,6 +75,21 @@ def route_oversized(df: DataFrame, parts: int,
     return df.repartition(parts, bucket)
 
 
+def persisted_extraction(df: DataFrame,
+                         pages: list[int] | None = None) -> DataFrame:
+    """The struct pass, persisted so that one kernel call per document feeds
+    every sink read from it (the reference parses once per concern,
+    core/extractor.py:116,149,201).  The payload column is replaced by its
+    length, ``n_bytes``; ``pages`` is with_extraction's page subset.  The
+    caller unpersists the result."""
+    return (
+        with_extraction(df, pages=pages)
+        .withColumn("n_bytes", F.length("html").cast("long"))
+        .drop("html")
+        .persist()
+    )
+
+
 def extracted_docs(df: DataFrame, has_ext: bool = False) -> DataFrame:
     """Document-level output table: one row per url.
 
@@ -106,7 +103,7 @@ def extracted_docs(df: DataFrame, has_ext: bool = False) -> DataFrame:
         from ..operators.extract import extracted_docs_frame
 
         return extracted_docs_frame(df)
-    # expects columns: url, warc_ts, lang, ext, n_bytes
+    # expects persisted_extraction's columns: url, warc_ts, lang, ext, n_bytes
     return df.select(
         "url", "warc_ts", "lang",
         *[F.col(f"ext.{f.name}").alias(f.name) for f in DOC_SCHEMA.fields],
@@ -204,6 +201,16 @@ def extracted_tables(df: DataFrame, has_ext: bool = False) -> DataFrame:
     )
 
 
+def docs_json_rows(docs: DataFrame) -> DataFrame:
+    """JSON document sink shape (OP-07; extraction_result.py:133-140) of a
+    docs frame: one JSON string per document, UTF-8, non-ASCII preserved,
+    carrying every column of ``docs`` but the already-JSON metadata."""
+    payload = F.to_json(
+        F.struct(*[c for c in docs.columns if c != "metadata_json"])
+    )
+    return docs.select("url", payload.alias("json"))
+
+
 def write_tables_csv(tables: DataFrame, out_dir: str) -> None:
     """CSV table sink (OP-08; ref table_extractor.py:137-171): one CSV
     dataset of exploded cells keyed by (url, page, table, row) — the
@@ -280,15 +287,8 @@ def run_extraction(
         routed = route_oversized(part, parts)
         obs = Observation(f"bucket_{b}")
         if write_pages_table:
-            # one kernel pass feeds both sinks: persist the extraction
-            # (payload column dropped — the reference re-parses per concern,
-            # /root/reference/.../core/extractor.py:116,149,201; we don't)
-            ext = (
-                with_extraction(routed)
-                .withColumn("n_bytes", F.length("html").cast("long"))
-                .drop("html")
-                .persist()
-            )
+            # one kernel pass feeds both sinks
+            ext = persisted_extraction(routed)
             docs = extracted_docs(ext, has_ext=True)
         else:
             # docs-only run: slim kernel path, nothing nested crosses Arrow

@@ -1,6 +1,7 @@
 """CLI parity layer (reference main.py flags over api.py) on the fixture
 corpus — in-process with the shared session so no second JVM spins up."""
 
+import csv
 import json
 import random
 
@@ -67,24 +68,90 @@ def test_cli_toggles_and_pages(spark, tmp_path, doc_dir):
     assert "text" not in docs.columns
 
 
+def _json_docs(out):
+    return [json.loads(ln) for f in sorted((out / "json").glob("part-*"))
+            for ln in f.read_text().splitlines()]
+
+
+def _csv_rows(out):
+    return [r for f in sorted((out / "tables").glob("part-*.csv"))
+            for r in csv.DictReader(f.read_text().splitlines())]
+
+
+@pytest.mark.parametrize("extra", [[], ["--pages", "1"]])
+def test_cli_no_text_keeps_text_out_of_json(spark, tmp_path, doc_dir, extra):
+    """The JSON rows are built from the docs table as written: --no-text
+    drops the text from both, with or without --pages."""
+    out = tmp_path / "out"
+    assert main([str(doc_dir), "--output-dir", str(out), "--no-text",
+                 "--no-images", "--no-tables"] + extra, spark=spark) == 0
+    docs = spark.read.parquet(str(out / "docs"))
+    rows = _json_docs(out)
+    assert len(rows) == docs.count() == 3
+    for r in rows:
+        assert "text" not in r and "total_chars" in r
+        assert set(r) <= set(docs.columns) - {"metadata_json"}
+
+
 def test_cli_pages_filters_every_written_artifact(spark, tmp_path, doc_dir):
-    """--pages must shape the OUTPUT datasets, not just the summary: the
-    3-page PDF contributes only page 1, and the doc text is reassembled
-    from the surviving pages alone."""
+    """--pages must shape the OUTPUT datasets, not just the summary: each
+    doc keeps only the requested pages, every docs column describes those
+    pages alone, and a doc that has none of them is in no artifact."""
     import pyspark.sql.functions as F
 
-    out = tmp_path / "out3"
-    rc = main([str(doc_dir), "--output-dir", str(out), "--pages", "1"],
-              spark=spark)
-    assert rc == 0
-    docs = spark.read.parquet(str(out / "docs"))
-    assert {r["n_pages"] for r in docs.select("n_pages").collect()} == {1}
-    pdf_text = docs.filter(F.col("kind") == "pdf").select("text").collect()
-    for r in pdf_text:
-        assert "=== Page 1 ===" in r["text"]
-        assert "=== Page 2 ===" not in r["text"]
-    imgs = spark.read.parquet(str(out / "images"))
-    assert imgs.filter(F.col("page_number") != 1).count() == 0
+    from pdf_extractor_spark.kernels.dispatch import extract_document
+    from pdf_extractor_spark.operators.extract import _doc_row
+    from pdf_extractor_spark.schema import DOC_SCHEMA
+    from pdf_extractor_spark.sources.synth import make_table_spec
+
+    rng = random.Random(5)
+    (doc_dir / "d.pdf").write_bytes(make_pdf(
+        rng, 4, n_pages=2, with_images=False,
+        page_tables=[make_table_spec(rng), make_table_spec(rng)])[0])
+    (doc_dir / "e.html").write_bytes(
+        b"<html><body><p>one two three four five six seven eight nine</p>"
+        b"<table><tr><td>a</td><td>b</td></tr><tr><td>c</td><td>d</td></tr>"
+        b"</table></body></html>")
+    payloads = {f.resolve().as_uri(): f.read_bytes()
+                for f in doc_dir.iterdir()}
+    html_urls = {u for u in payloads if u.endswith(".html")}
+
+    def expected_docs(keep):
+        want = {}
+        for url, b in payloads.items():
+            r = extract_document(b)
+            kept = [p for p in r["pages"] if p["page_number"] in keep]
+            if kept:
+                want[url] = {**_doc_row({**r, "pages": kept}),
+                             "n_bytes": len(b)}
+        return want
+
+    for keep in ([1], [2]):
+        out = tmp_path / f"out{keep[0]}"
+        rc = main([str(doc_dir), "--output-dir", str(out), "--pages",
+                   str(keep[0]), "--min-image-size", "1"], spark=spark)
+        assert rc == 0
+        want = expected_docs(keep)
+        docs = spark.read.parquet(str(out / "docs"))
+        assert {f.name for f in DOC_SCHEMA.fields} <= set(docs.columns)
+        got = {r["url"]: r.asDict() for r in docs.collect()}
+        assert set(got) == set(want)
+        for url, row in want.items():
+            for col, value in row.items():
+                assert got[url][col] == value, (url, col)
+        assert {r["url"] for r in _json_docs(out)} == set(want)
+        imgs = spark.read.parquet(str(out / "images"))
+        assert {r["page_number"] for r in imgs.collect()} == set(keep)
+        tables = _csv_rows(out)
+        assert tables and {int(r["page_number"]) for r in tables} == set(keep)
+        if keep == [2]:
+            assert not html_urls & set(want)
+            assert not html_urls & {r["url"] for r in imgs.collect()}
+            assert not html_urls & {r["url"] for r in tables}
+        pdf_text = docs.filter(F.col("kind") == "pdf").select("text").collect()
+        for r in pdf_text:
+            assert f"=== Page {keep[0]} ===" in r["text"]
+            assert f"=== Page {3 - keep[0]} ===" not in r["text"]
 
 
 def test_cli_bad_pages_and_missing_input(spark, tmp_path):

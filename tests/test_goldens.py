@@ -7,6 +7,7 @@ against the committed goldens — any kernel behavior drift fails here first.
 import json
 from pathlib import Path
 
+from pdf_extractor_spark.kernels.dispatch import assemble_doc_text
 from tests.gen_fixtures import GOLDEN_DIR, compute_goldens, doc_key, fixture_rows
 
 
@@ -24,6 +25,17 @@ def test_byte_identity_vs_goldens():
         assert disk_txt == text_bytes, f"text drift for {key}"
         disk_sum = json.loads((GOLDEN_DIR / f"{key}.json").read_text())
         assert disk_sum == summary, f"summary drift for {key}"
+
+
+def test_assemble_doc_text_orders_pages():
+    """The goldens' text oracle orders pdf pages by page_number, never by
+    list order, and passes a single-page kind's text through unbannered."""
+    pdf = {"kind": "pdf", "pages": [{"page_number": 2, "text": "second"},
+                                    {"page_number": 1, "text": "first"}]}
+    html = {"kind": "html", "pages": [{"page_number": 1, "text": "only"}]}
+    assert assemble_doc_text(pdf) == (
+        "=== Page 1 ===\nfirst\n\n=== Page 2 ===\nsecond")
+    assert assemble_doc_text(html) == "only"
 
 
 def test_no_orphan_goldens():

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.plans.pipeline import (
-    doc_text_expr,
     extracted_docs,
     extracted_pages,
     route_oversized,
@@ -68,22 +67,6 @@ def test_pages_table_shape(spark, fixture_df):
     by_kind = {r["kind"]: r for r in rows}
     assert by_kind["pdf"]["max_page"] >= 2  # multi-page PDFs exploded
     assert by_kind["html"]["max_page"] == 1
-
-
-def test_doc_text_expr_equals_kernel_assembly(spark, fixture_df):
-    """The zero-shuffle higher-order reassembly must equal the kernel's
-    assemble_doc_text (used to produce the goldens) — proven indirectly by
-    byte identity above, and here directly on out-of-order page arrays."""
-    df = spark.createDataFrame(
-        [("u1", "pdf", [(2, "second"), (1, "first")]),
-         ("u2", "html", [(1, "only")])],
-        "url string, kind string, pages array<struct<page_number:int, text:string>>",
-    )
-    got = {r["url"]: r["t"] for r in df.select(
-        "url", doc_text_expr(F.col("pages"), F.col("kind")).alias("t")
-    ).collect()}
-    assert got["u1"] == "=== Page 1 ===\nfirst\n\n=== Page 2 ===\nsecond"
-    assert got["u2"] == "only"
 
 
 def test_route_oversized_partitions(spark, fixture_df):
