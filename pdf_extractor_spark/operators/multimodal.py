@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.png import PngError, decode_png, encode_png, enhance, thumbnail
+from .pipeline_queries import _doc_gate
 from .registry import T, query
 
 DECODE_SCHEMA = (
@@ -309,44 +310,27 @@ def q_jpeg_420(spark: SparkSession, sf: str) -> DataFrame:
     from ..kernels.jpeg import decode_jpeg_baseline
     from ..sources.synth_jpeg import encode_jpeg_baseline
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ok, ws, hs = [], [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                w = 16 + doc_id % 40
-                h = 12 + (doc_id * 7) % 36
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                # gentle ramps (slope <= 2/px): 2x2 chroma pooling error
-                # stays within the flat-quant tolerance; steep ramps would
-                # alias the subsampled chroma by design, not by bug
-                img = np.stack([
-                    2 * x + y, x + 2 * y, 30 + x + y,
-                ], axis=-1).astype(np.uint8)
-                data = encode_jpeg_baseline(
-                    w, h, img.tobytes(), 3, subsampling="420")
-                w2, h2, ch, px = decode_jpeg_baseline(data)
-                dec = np.frombuffer(px, dtype=np.uint8).reshape(h2, w2, 3)
-                good = (
-                    (w2, h2, ch) == (w, h, 3)
-                    and int(np.abs(dec.astype(int) - img.astype(int)).max()) <= 8
-                )
-                ok.append(1 if good else 0)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame({"ok": ok, "w": ws, "h": hs})
+    def check(doc_id):
+        w = 16 + doc_id % 40
+        h = 12 + (doc_id * 7) % 36
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        # gentle ramps (slope <= 2/px): 2x2 chroma pooling error stays
+        # within the flat-quant tolerance; steep ramps would alias the
+        # subsampled chroma by design, not by bug
+        img = np.stack([
+            2 * x + y, x + 2 * y, 30 + x + y,
+        ], axis=-1).astype(np.uint8)
+        data = encode_jpeg_baseline(w, h, img.tobytes(), 3, subsampling="420")
+        w2, h2, ch, px = decode_jpeg_baseline(data)
+        dec = np.frombuffer(px, dtype=np.uint8).reshape(h2, w2, 3)
+        good = (
+            (w2, h2, ch) == (w, h, 3)
+            and int(np.abs(dec.astype(int) - img.astype(int)).max()) <= 8
+        )
+        return int(good), w, h
 
-    per_doc = (
-        spark.range(0, 100, numPartitions=8)
-        .mapInPandas(run, schema="ok int, w int, h int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("ok").cast("long").alias("n_ok"),
-        F.sum("w").cast("long").alias("sum_w"),
-        F.sum("h").cast("long").alias("sum_h"),
-    )
+    return _doc_gate(spark, 100, check, ("n_ok", "sum_w", "sum_h"))
 
 
 @query(
@@ -379,39 +363,23 @@ def q_jpeg_progressive(spark: SparkSession, sf: str) -> DataFrame:
         encode_jpeg_progressive,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ok, ws, hs = [], [], []
-            for i in pdf["id"]:
-                doc_id = int(i)
-                w = 16 + doc_id % 33
-                h = 14 + (doc_id * 5) % 29
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                img = np.stack([
-                    (3 * x + 7 * y + doc_id) % 256,
-                    (5 * x + 2 * y + 31 * doc_id) % 256,
-                    (x + y + 77 * doc_id) % 256,
-                ], axis=-1).astype(np.uint8)
-                sub = "420" if doc_id % 2 else "444"
-                _, _, _, seq = decode_jpeg_baseline(encode_jpeg_baseline(
-                    w, h, img.tobytes(), 3, subsampling=sub))
-                prog = encode_jpeg_progressive(
-                    w, h, img.tobytes(), 3, subsampling=sub,
-                    successive=doc_id % 4 < 2)
-                w2, h2, ch, px = decode_jpeg_baseline(prog)
-                ok.append(1 if (w2, h2, ch) == (w, h, 3) and px == seq else 0)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame({"ok": ok, "w": ws, "h": hs})
+    def check(doc_id):
+        w = 16 + doc_id % 33
+        h = 14 + (doc_id * 5) % 29
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        img = np.stack([
+            (3 * x + 7 * y + doc_id) % 256,
+            (5 * x + 2 * y + 31 * doc_id) % 256,
+            (x + y + 77 * doc_id) % 256,
+        ], axis=-1).astype(np.uint8)
+        sub = "420" if doc_id % 2 else "444"
+        _, _, _, seq = decode_jpeg_baseline(encode_jpeg_baseline(
+            w, h, img.tobytes(), 3, subsampling=sub))
+        prog = encode_jpeg_progressive(
+            w, h, img.tobytes(), 3, subsampling=sub,
+            successive=doc_id % 4 < 2)
+        w2, h2, ch, px = decode_jpeg_baseline(prog)
+        return int((w2, h2, ch) == (w, h, 3) and px == seq), w, h
 
-    per_doc = (
-        spark.range(0, 80, numPartitions=8)
-        .mapInPandas(run, schema="ok int, w int, h int")
-    )
-    return per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("ok").cast("long").alias("n_ok"),
-        F.sum("w").cast("long").alias("sum_w"),
-        F.sum("h").cast("long").alias("sum_h"),
-    )
+    return _doc_gate(spark, 80, check, ("n_ok", "sum_w", "sum_h"))

@@ -87,42 +87,60 @@ def _stable_repr(obj) -> str:
     return repr(obj)
 
 
+#: Functions and classes defined under this prefix are hashed by source and
+#: followed; ``registry`` itself (``T``, ``fan_out``) stays name-only.
+_FOLLOWED = "pdf_extractor_spark.operators."
+
+
+def _followed(obj, home: str) -> bool:
+    mod = getattr(obj, "__module__", None) or ""
+    return mod == home or (mod.startswith(_FOLLOWED) and mod != __name__)
+
+
 def key_fingerprint(key: str) -> str:
     """Per-key staleness fingerprint for the driver-cap rotation
     (ADVICE round-4, high): sha256 over the query function's source, the
-    sources of every same-module function/class it transitively references,
-    the repr of every same-module plain constant it references, and the
-    oracle SQL — so an edit to an UNRELATED function in the same module no
-    longer stales a certified key, while any edit that can change THIS
-    key's behavior (its own body, a helper it calls, a shared constant, or
-    its oracle) does.  Cross-module dependencies (kernels, pyspark) hash as
-    bare names — the same blind spot the old whole-module-md5 scheme had,
-    now scoped instead of module-wide."""
+    sources of every function/class it transitively references that is
+    defined in its own module or in another ``operators`` module (each
+    followed function's globals resolve in that function's own module), the
+    repr of every plain constant so reached, and the oracle SQL.  An edit
+    to an UNRELATED function never stales a certified key, while any edit
+    that can change THIS key's behavior (its own body, a helper it calls
+    in any operators module, such as ``pipeline_queries._doc_gate``, a
+    shared constant, or its oracle) does.  ``registry`` (``T``,
+    ``fan_out``), the kernels and pyspark still hash as bare names:
+    following them would stale almost every key at once (118 of 125 when
+    this rule was set), over the driver's 50-row cap."""
     fn = QUERIES[key]
-    mod = sys.modules[fn.__module__]
+    home = fn.__module__
     parts: dict[str, str] = {"__self__": inspect.getsource(fn),
                              "__oracle__": ORACLES.get(key, "")}
-    seen: set[str] = set()
+    seen: set[tuple[str, str]] = set()
     frontier = [fn]
     while frontier:
         cur = frontier.pop()
+        mod = cur.__module__
+        env = sys.modules[mod].__dict__
         for name in sorted(_code_global_names(cur)):
-            if name in seen or name not in mod.__dict__:
+            if (mod, name) in seen or name not in env:
                 continue
-            seen.add(name)
-            obj = mod.__dict__[name]
+            seen.add((mod, name))
+            # the query's own module keeps bare part names, so a key whose
+            # closure stays in its module hashes as it always has
+            part = name if mod == home else f"{mod}:{name}"
+            obj = env[name]
             if (inspect.isfunction(obj) or inspect.isclass(obj)) and \
-                    getattr(obj, "__module__", None) == fn.__module__:
+                    _followed(obj, home):
                 try:
-                    parts[name] = inspect.getsource(obj)
+                    parts[part] = inspect.getsource(obj)
                 except (OSError, TypeError):
-                    parts[name] = f"<unsourceable:{name}>"
+                    parts[part] = f"<unsourceable:{name}>"
                 if inspect.isfunction(obj):
                     frontier.append(obj)
             elif isinstance(obj, _PLAIN):
-                parts[name] = _stable_repr(obj)
+                parts[part] = _stable_repr(obj)
             else:  # imported module / foreign callable: name-only marker
-                parts[name] = f"<extern:{name}>"
+                parts[part] = f"<extern:{name}>"
     h = hashlib.sha256()
     for name in sorted(parts):
         h.update(name.encode())

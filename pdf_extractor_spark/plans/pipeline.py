@@ -249,7 +249,6 @@ def run_extraction(
     input_df: DataFrame,
     out_dir: str,
     n_buckets: int = 8,
-    parts_per_bucket: int | None = None,
     resume: bool = True,
     write_pages_table: bool = True,
     run_id: str | None = None,
@@ -268,7 +267,7 @@ def run_extraction(
     ``fail_after_buckets`` injects a crash for the resume test.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    parts = parts_per_bucket or max(
+    parts = max(
         8, spark.sparkContext.defaultParallelism * 2 // max(1, n_buckets)
     )
     done = {e["bucket"] for e in read_manifest(out_dir) if e["status"] == "ok"} if resume else set()

@@ -12,6 +12,7 @@ oracle-comparison and scaling runs share identical semantics:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -72,14 +73,37 @@ def get_spark(
 
 
 def package_zip() -> str:
-    """Build (once per process) a zip of this package for --py-files."""
+    """Build (once per process) a zip of this package for --py-files.
+
+    The path is named by a hash of the package sources, and the bytes are
+    a pure function of them (sorted entries, fixed timestamps), so processes
+    of one checkout share one file and processes of two checkouts never
+    write one path with different bytes (Spark refuses a user file whose
+    contents change under the same name).  The zip is written to a temp
+    file and renamed into place, so a reader never sees a partial file."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
         pkg_dir = Path(__file__).resolve().parent
-        zip_path = Path(tempfile.gettempdir()) / "pdf_extractor_spark.zip"
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
-                zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
+        files = [(f"{pkg_dir.name}/{py.relative_to(pkg_dir)}", py.read_bytes())
+                 for py in sorted(pkg_dir.rglob("*.py"))]
+        h = hashlib.sha256()
+        for name, data in files:
+            h.update(name.encode() + b"\x00" + data + b"\x01")
+        tmp_dir = tempfile.gettempdir()
+        zip_path = Path(tmp_dir) / f"{pkg_dir.name}-{h.hexdigest()[:16]}.zip"
+        if not zip_path.exists():
+            fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tmp_dir)
+            try:
+                with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+                    for name, data in files:
+                        info = zipfile.ZipInfo(name, (1980, 1, 1, 0, 0, 0))
+                        info.external_attr = 0o644 << 16
+                        zf.writestr(info, data)
+                os.chmod(tmp, 0o644)  # mkstemp makes it owner-only
+                os.replace(tmp, zip_path)
+            except BaseException:
+                os.unlink(tmp)
+                raise
         _PKG_ZIP = str(zip_path)
     return _PKG_ZIP
 

@@ -2,8 +2,8 @@
 
 Run on a cluster:
 
-    python -c "from pdf_extractor_spark.session import package_zip; print(package_zip())"
-    spark-submit --py-files /tmp/pdf_extractor_spark.zip \
+    ZIP=$(python -c "from pdf_extractor_spark.session import package_zip; print(package_zip())")
+    spark-submit --py-files "$ZIP" \
         scripts/extract_job.py --input s3://crawl/pages --output s3://out/docs \
         --buckets 64 [--pages-table] [--no-resume]
 

@@ -216,6 +216,47 @@ def q_probe_b(spark, sf):
     assert load("oracle", oracle="SELECT 2 AS two") != ref  # oracle SQL
     assert load("noracle", oracle=None) != ref  # oracle removed
 
+    # A helper imported from another operators module is followed too, and
+    # its globals resolve in its own module.
+    helper_src = '''
+K = {k}
+def helper(x):
+    return x + K + {helper_add}
+def unrelated():
+    return {unrel}
+'''
+    main_src = '''
+from pdf_extractor_spark.operators._fp_helper import helper
+def q_probe(spark, sf):
+    return helper(1)
+'''
+
+    def load2(tag, k=1, helper_add=0, unrel=0):
+        # fixed module names: the helper's module is part of what is hashed
+        mods = {"pdf_extractor_spark.operators._fp_helper":
+                helper_src.format(k=k, helper_add=helper_add, unrel=unrel),
+                "fpmain": main_src}
+        key = f"q_fp_probe2_{tag}"
+        try:
+            for name, src in mods.items():
+                p = tmp_path / f"{tag}_{name.rsplit('.', 1)[-1]}.py"
+                p.write_text(src)
+                spec = importlib.util.spec_from_file_location(name, p)
+                mod = importlib.util.module_from_spec(spec)
+                sys.modules[name] = mod
+                spec.loader.exec_module(mod)
+            registry.QUERIES[key] = mod.q_probe
+            return registry.key_fingerprint(key)
+        finally:
+            registry.QUERIES.pop(key, None)
+            for name in mods:
+                sys.modules.pop(name, None)
+
+    ref2 = load2("ref")
+    assert load2("unrel", unrel=42) == ref2       # unrelated helper-module edit
+    assert load2("helper", helper_add=2) != ref2  # the helper's body
+    assert load2("const", k=2) != ref2            # a constant in its module
+
 
 def test_key_fingerprints_stable_across_processes():
     """Every registered key's fingerprint is the same in two fresh

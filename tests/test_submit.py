@@ -28,14 +28,9 @@ def test_spark_submit_py_files(tmp_path):
         else:
             pytest.skip("spark-submit not on PATH nor in the pyspark wheel")
 
-    # build the zip the way session.package_zip does, into tmp
-    import zipfile
+    from pdf_extractor_spark.session import package_zip
 
-    pkg = REPO / "pdf_extractor_spark"
-    zip_path = tmp_path / "pdf_extractor_spark.zip"
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for py in sorted(pkg.rglob("*.py")):
-            zf.write(py, f"pdf_extractor_spark/{py.relative_to(pkg)}")
+    zip_path = package_zip()
 
     out = tmp_path / "docs_out"
     env = dict(os.environ)
@@ -46,7 +41,7 @@ def test_spark_submit_py_files(tmp_path):
             spark_submit, "--master", "local[4]",
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.sql.session.timeZone=UTC",
-            "--py-files", str(zip_path),
+            "--py-files", zip_path,
             str(REPO / "scripts" / "extract_job.py"),
             "--synthetic", "120", "--output", str(out), "--buckets", "3",
         ],
@@ -60,3 +55,29 @@ def test_spark_submit_py_files(tmp_path):
     manifest = (out / "_checkpoint" / "manifest.jsonl").read_text().splitlines()
     assert len(manifest) == 3  # one row per bucket
     assert sum(json.loads(m)["n_docs"] for m in manifest) == 120
+
+
+def test_package_zip_path_is_per_source_version(tmp_path):
+    """Two checkouts that differ by one source byte get different zip paths,
+    so a process of one never rewrites the zip another has shipped to Spark
+    (which aborts when a user file changes under the same name)."""
+    from pdf_extractor_spark.session import package_zip
+
+    ours = Path(package_zip())
+    before = ours.read_bytes()
+
+    copy = tmp_path / "checkout"
+    shutil.copytree(REPO / "pdf_extractor_spark", copy / "pdf_extractor_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    schema = copy / "pdf_extractor_spark" / "schema.py"
+    schema.write_bytes(schema.read_bytes() + b"#")
+    res = subprocess.run(
+        [sys.executable, "-c",
+         "import pdf_extractor_spark.session as s; "
+         "assert s.__file__.startswith(%r), s.__file__; "
+         "print(s.package_zip())" % str(copy)],
+        cwd=copy, env={**os.environ, "PYTHONPATH": str(copy)},
+        capture_output=True, text=True, check=True, timeout=120)
+    theirs = Path(res.stdout.strip().splitlines()[-1])
+    assert theirs != ours and theirs.is_file()
+    assert ours.read_bytes() == before
