@@ -52,8 +52,8 @@ def extract(df: DataFrame, pages: list[int] | None = None) -> DataFrame:
 
 
 def extract_text_only(df: DataFrame) -> DataFrame:
-    """Doc-level text + counts (reference extract_text_only) — runs the slim
-    kernel path: nothing but scalars crosses the Arrow boundary."""
+    """Doc-level text + counts (reference extract_text_only) — runs the
+    docs-only kernel path: no page tree crosses the Arrow boundary."""
     return extracted_docs(df).select(
         "url", "kind", "status", "title", "n_pages", "text",
         "total_chars", "total_words",

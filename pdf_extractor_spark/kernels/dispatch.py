@@ -57,11 +57,6 @@ def sniff_kind(payload: bytes) -> str:
     return "raw"
 
 
-def _counts(text: str) -> tuple[int, int]:
-    # reference-derived counts: extraction_result.py:20-23
-    return len(text), len(text.split())
-
-
 def _page(page_number: int, text: str, word_count: int, blocks=None,
           images=None, tables=None, links=None) -> dict:
     """``word_count`` is ``len(text.split())``, which each kind derives
@@ -75,28 +70,6 @@ def _page(page_number: int, text: str, word_count: int, blocks=None,
         "images": images or [],
         "tables": tables or [],
         "links": links or [],
-    }
-
-
-def _unify_pdf_block(b: dict) -> dict:
-    chars, words = _counts(b["text"])
-    return {
-        "block_no": b["block_no"], "tag": "line", "text": b["text"],
-        "char_count": chars, "word_count": words,
-        "x0": b["x0"], "y0": b["y0"], "x1": b["x1"], "y1": b["y1"],
-        "block_type": b["block_type"], "link_density": 0.0,
-        "is_content": True,
-    }
-
-
-def _unify_image(img: dict) -> dict:
-    return {
-        "image_index": img["image_index"],
-        "name": img.get("name", ""),
-        "width": img["width"], "height": img["height"],
-        "format": img["format"],
-        "size_bytes": len(img["payload"]),
-        "payload": img["payload"],
     }
 
 
@@ -143,8 +116,7 @@ def _pdf_pages(payload: bytes) -> tuple[list, str, dict]:
         text = tokenizer.normalize_text(pg["text"])
         pages.append(_page(
             pg["page_number"], text, tokenizer.word_count(text),
-            blocks=[_unify_pdf_block(b) for b in pg["blocks"]],
-            images=[_unify_image(i) for i in pg["images"]],
+            blocks=pg["blocks"], images=pg["images"],
             tables=pg["tables"],
             links=pg["links"],
         ))

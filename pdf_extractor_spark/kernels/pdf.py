@@ -2068,12 +2068,13 @@ def _assemble_from_lines(lines: list[list[dict]]) -> tuple[str, list[dict]]:
         y = line[0]["y"]
         size = max(r["size"] for r in line)
         x1 = line[-1]["x"] + 0.5 * line[-1]["size"] * len(line[-1]["text"])
-        blocks.append({
-            "block_no": len(blocks),
-            "text": text,
+        blocks.append({  # BLOCK_SCHEMA shape; counts: extraction_result.py:20-23
+            "block_no": len(blocks), "tag": "line", "text": text,
+            "char_count": len(text), "word_count": len(text.split()),
             "x0": round(x0, 2), "y0": round(y, 2),
             "x1": round(x1, 2), "y1": round(y + size, 2),
             "block_type": 0,  # text block (reference block[6]==0, OP-26)
+            "link_density": 0.0, "is_content": True,
         })
         out_lines.append(text)
     return "\n".join(out_lines), blocks
@@ -2252,6 +2253,7 @@ def _page_images(doc: Document, page: dict) -> list[dict]:
             "width": int(doc.resolve(xo.dict.get(Name("Width"))) or 0),
             "height": int(doc.resolve(xo.dict.get(Name("Height"))) or 0),
             "format": fmt,
+            "size_bytes": len(payload),
             "payload": payload,
         })
     return images
@@ -2311,7 +2313,8 @@ def _walk_pages(doc: Document, node: dict, out: list[dict],
 def parse_pdf(data: bytes) -> dict:
     """OP-59/OP-60 kernel: PDF bytes -> {n_pages, pages[], metadata}.
 
-    Each page: {page_number (1-indexed), text, blocks[], tables[], images[]}.
+    Each page: {page_number (1-indexed), text, blocks[], tables[], images[]},
+    blocks and images already in schema.BLOCK_SCHEMA / IMAGE_SCHEMA shape.
     Raises PdfError on out-of-dialect input.
     """
     doc = Document(data)

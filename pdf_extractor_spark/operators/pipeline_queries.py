@@ -86,12 +86,14 @@ def q_extract_text(spark: SparkSession, sf: str) -> DataFrame:
     """Flagship kernel gate (OP-64/65 + OP-43b): full Arrow-UDF DOM
     extraction must reproduce, byte-identically, the SQL-stated expectation —
     heading + article body when the body clears MIN_CONTENT_WORDS, else
-    empty (heading demoted, kernels/dom.py _classify).  Uses the slim
-    doc-level kernel (flat mapInArrow, no nested structs over Arrow)."""
-    from ..operators.extract import extracted_docs_frame
+    empty (heading demoted, kernels/dom.py _classify).  Runs the docs
+    table of plans/pipeline.extracted_docs, whose kernel returns the
+    docs-table columns alone (no page tree over Arrow); ``doc_id`` passes
+    through."""
+    from ..plans.pipeline import extracted_docs
 
     pages = pages_from_documents(spark, sf)
-    return extracted_docs_frame(pages).select("doc_id", "title", "text")
+    return extracted_docs(pages).select("doc_id", "title", "text")
 
 
 @query(

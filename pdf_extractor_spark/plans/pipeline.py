@@ -10,13 +10,14 @@ Dataflow::
          partition and an Arrow batch never holds many multi-MB payloads
          (§4.3.2); host-level value skew is handled by salted aggregation
          in operators/relational
-      -> ONE kernel pass: docs-only runs use the slim mapInArrow
-         (operators/extract.extracted_docs_frame); runs that also write the
-         pages table, and every cli run, use persisted_extraction: the
-         struct pass (operators/extract.with_extraction, page subset applied
-         in the kernel) persisted once and read by every sink.  The docs
-         table selects the doc columns the kernel already built in that
-         pass (operators/extract._doc_row builds them for both)
+      -> ONE kernel pass, one arrow_udf (operators/extract._kernel_udf)
+         returning the struct ``ext``: docs-only runs attach the docs-table
+         columns alone (with_doc_columns); runs that also write the pages
+         table, and every cli run, use persisted_extraction: the struct pass
+         with the page tree (with_extraction, page subset applied in the
+         kernel) persisted once and read by every sink.  Either way one
+         select (extracted_docs) flattens ``ext`` into the docs table, and
+         operators/extract._doc_row builds its columns
       -> per-bucket parquet write + checkpoint manifest row with lineage +
          doc/byte counters (Observation API)                      (§4.3.3)
 
@@ -24,7 +25,8 @@ Scale notes (100 TB / 1000 executors): buckets are independent jobs — the
 failure domain and the resume unit.  At cluster scale you size n_buckets so
 one bucket ≈ a few minutes of cluster work; kill-restart loses at most one
 bucket.  All per-doc work is embarrassingly parallel; the only shuffle in
-the whole plan is the explicit repartition (no groupBy/join on the hot path).
+the whole plan is route_oversized's repartition (no groupBy/join on the hot
+path).
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import with_extraction
+from ..operators.extract import with_doc_columns, with_extraction
 from ..schema import DOC_SCHEMA
 
 __all__ = [
@@ -75,6 +77,12 @@ def route_oversized(df: DataFrame, parts: int,
     return df.repartition(parts, bucket)
 
 
+def _n_bytes():
+    """The docs table's ``n_bytes``: the payload length, 0 for a null
+    payload (which extracts as empty)."""
+    return F.coalesce(F.length("html"), F.lit(0)).cast("long")
+
+
 def persisted_extraction(df: DataFrame,
                          pages: list[int] | None = None) -> DataFrame:
     """The struct pass, persisted so that one kernel call per document feeds
@@ -84,7 +92,7 @@ def persisted_extraction(df: DataFrame,
     caller unpersists the result."""
     return (
         with_extraction(df, pages=pages)
-        .withColumn("n_bytes", F.length("html").cast("long"))
+        .withColumn("n_bytes", _n_bytes())
         .drop("html")
         .persist()
     )
@@ -93,21 +101,20 @@ def persisted_extraction(df: DataFrame,
 def extracted_docs(df: DataFrame, has_ext: bool = False) -> DataFrame:
     """Document-level output table: one row per url.
 
-    Standalone (has_ext=False): the slim doc-level pass
-    (operators/extract.extracted_docs_frame), so no nested structs cross
-    the Arrow boundary.  Shared-pass mode (has_ext=True, used when the pages
-    table is written from the same kernel pass): a flat select of the doc
-    columns the struct pass already carries.  Both get their columns from
-    operators/extract._doc_row, in the same order."""
+    One select builds it in every mode: every input column but ``html``,
+    ``text``, ``ext`` and ``n_bytes``, in input order, then the DOC_SCHEMA
+    fields of ``ext``, then ``n_bytes``.  Standalone (has_ext=False) first
+    attaches the docs-table struct alone (operators/extract.with_doc_columns),
+    so no page tree crosses the Arrow boundary; shared-pass mode
+    (has_ext=True) reads persisted_extraction's ``ext`` and ``n_bytes``.
+    The columns come from operators/extract._doc_row either way."""
+    n_bytes = F.col("n_bytes")
     if not has_ext:
-        from ..operators.extract import extracted_docs_frame
-
-        return extracted_docs_frame(df)
-    # expects persisted_extraction's columns: url, warc_ts, lang, ext, n_bytes
+        df, n_bytes = with_doc_columns(df), _n_bytes()
     return df.select(
-        "url", "warc_ts", "lang",
+        *[c for c in df.columns if c not in ("html", "text", "ext", "n_bytes")],
         *[F.col(f"ext.{f.name}").alias(f.name) for f in DOC_SCHEMA.fields],
-        "n_bytes",
+        n_bytes.alias("n_bytes"),
     )
 
 
@@ -290,7 +297,7 @@ def run_extraction(
             ext = persisted_extraction(routed)
             docs = extracted_docs(ext, has_ext=True)
         else:
-            # docs-only run: slim kernel path, nothing nested crosses Arrow
+            # docs-only run: the kernel returns the docs columns alone
             ext = None
             docs = extracted_docs(routed)
         docs = docs.observe(

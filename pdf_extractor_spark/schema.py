@@ -72,10 +72,13 @@ PAGE_SCHEMA = T.StructType([
 # The docs table's derived columns, one row per document: the per-doc
 # summary of the reference's ExtractionResult (extraction_result.py:100-130).
 # ``text`` is the assembled doc text (dispatch.assemble_doc_text, the goldens
-# oracle); metadata rides as a deterministic JSON string, because struct
-# returns and MapType columns each cost severalfold in Arrow conversion.
-# operators/extract._doc_row builds these columns and nothing else does;
-# timestamps are derived relationally (OP-21), never inside the kernel.
+# oracle); metadata rides as a deterministic JSON string, because a MapType
+# column costs severalfold in Arrow conversion.  Docs-only runs return this
+# flat struct from the kernel's arrow_udf: pyarrow builds it as fast as the
+# same columns side by side; only the nested page tree of EXTRACTION_SCHEMA
+# is costly.  operators/extract._doc_row builds these
+# columns and nothing else does; timestamps are derived relationally
+# (OP-21), never inside the kernel.
 DOC_SCHEMA = T.StructType([
     T.StructField("kind", T.StringType(), False),
     T.StructField("status", T.StringType(), False),

@@ -5,7 +5,7 @@ evidenced by running the IDENTICAL extraction job on the IDENTICAL staged
 input at THREE local sizes — local[4] (N), local[8] (2N), local[16] (4N):
 
 * same input snapshot: a parquet corpus staged once under /tmp;
-* the job is MAP-ONLY — scan -> doc-level kernel (mapInArrow) -> parquet
+* the job is MAP-ONLY — scan -> doc-level kernel (arrow_udf) -> parquet
   sink; no shuffle (the full-extraction operator is a map; scan splits bound
   per-task input bytes, so no repartition is needed or wanted at 100 TB);
 * scan width sized to the tiny corpus (1 MB splits) — at 100 TB the default
@@ -196,7 +196,7 @@ Protocol (BASELINE.md / north rule, sandbox substitution): the identical
 MAP-ONLY extraction job — parquet scan ({N_DOCS} deterministic synthetic
 docs: ~70% HTML / 20% PDF (both xref dialects, both font dialects) / 10%
 raw, 1% oversized ~1 MiB, heavy-host skew 30%) -> vectorized doc-level
-kernel (mapInArrow) -> parquet sink — run at local[4] (N), local[8] (2N)
+kernel (arrow_udf) -> parquet sink — run at local[4] (N), local[8] (2N)
 and local[16] (4N) in {ROUNDS} temporally-adjacent rounds with ALTERNATING
 child order (this sandbox's absolute speed drifts over minutes and shows
 sporadic stalls; alternation cancels the bias, and the MEDIAN round — not

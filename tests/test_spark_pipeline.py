@@ -87,25 +87,36 @@ def test_parallelism_invariance(spark, fixture_df):
 
 
 def test_slim_equals_shared_pass(spark, fixture_df):
-    """Per-concern kernel split (schema.DOC_SCHEMA): the slim doc-level UDF
-    must be value-identical to the full-struct path's relational assembly
-    on every output column."""
-    from pdf_extractor_spark.operators.extract import with_extraction
+    """One docs-table shape (schema.DOC_SCHEMA): the docs-only kernel pass
+    must equal the docs table selected from persisted_extraction's struct
+    pass on every output column, null and empty payloads included (both
+    read ``n_bytes == 0``)."""
+    from pdf_extractor_spark.plans.pipeline import persisted_extraction
 
-    slim = extracted_docs(fixture_df)
-    shared = extracted_docs(
-        with_extraction(fixture_df)
-        .withColumn("n_bytes", F.length("html").cast("long"))
-        .drop("html"),
-        has_ext=True,
+    edge = spark.createDataFrame(
+        [("https://edge.example.net/s/null-payload", None, None, "", "nl"),
+         ("https://edge.example.net/s/empty-payload", None, b"", "", None)],
+        PAGES_INPUT_SCHEMA,
     )
-    # Column ORDER and every value — including the canonical metadata_json —
-    # must match, so docs-table bytes don't depend on write_pages_table mode.
-    assert slim.columns == shared.columns
+    df = fixture_df.unionByName(edge)
+    slim = extracted_docs(df)
+    ext = persisted_extraction(df)
+    try:
+        shared = extracted_docs(ext, has_ext=True)
+        # Column ORDER and every value — including the canonical
+        # metadata_json — must match, so docs-table bytes don't depend on
+        # write_pages_table mode.
+        assert slim.columns == shared.columns
+        got = shared.collect()
+    finally:
+        ext.unpersist()
     cols = slim.columns
-    a = {tuple(r[c] for c in cols) for r in slim.collect()}
-    b = {tuple(r[c] for c in cols) for r in shared.collect()}
-    assert a == b
+    assert ({tuple(r[c] for c in cols) for r in slim.collect()}
+            == {tuple(r[c] for c in cols) for r in got})
+    n_bytes = {r["url"]: r["n_bytes"] for r in got
+               if r["url"].startswith("https://edge.example.net/s/")}
+    assert n_bytes == {"https://edge.example.net/s/null-payload": 0,
+                       "https://edge.example.net/s/empty-payload": 0}
 
 
 def _project(value, dtype):
